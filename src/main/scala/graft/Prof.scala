@@ -7,6 +7,13 @@ import scala.collection.mutable
   * Usage: Prof <sfDir> <names-csv> [iters]
   */
 object Prof {
+  /** `k=v;k=v` → pairs; entries, keys and values are trimmed, so
+    * "a=1; b=2" sets `b`, not " b". */
+  private[graft] def confOverrides(raw: String): Seq[(String, String)] =
+    raw.split(";").toSeq.map(_.trim).filter(_.contains("=")).map { kv =>
+      val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",")
@@ -14,10 +21,7 @@ object Prof {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Extra conf overrides for overhead experiments, e.g.
     // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false;spark.sql.shuffle.partitions=8"
-    val extra = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
+    val extra = confOverrides(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

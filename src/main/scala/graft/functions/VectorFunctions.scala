@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanApi, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType}
 
@@ -517,6 +517,190 @@ case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
     copy(child = newChild)
 }
 
+/**
+ * Squared euclidean distance to the NEAREST of a set of literal centers,
+ * min over c of Σᵢ (xᵢ − cᵢ)², as one native codegen pass: q270's
+ * farthest-point round projection and q150's centred ‖x − μ‖² (one center).
+ *
+ * Replaces `least(d2(c₁), …, d2(c_k))` built as a Column fold of
+ * (emb[i] − lit)² terms: ~770 expression nodes per center, with new
+ * literals every greedy round, so each round was analyzed, optimized and
+ * code-generated from scratch. Here the centers are a constructor constant
+ * (Seq-of-Seq for structural equality) shipped into the generated code via
+ * addReferenceObj, so every round generates the same source.
+ *
+ * The arithmetic is the fold's, bit for bit: each distance accumulates left
+ * to right from term 0 (not 0.0 + term 0), term i being (xᵢ − cᵢ)·(xᵢ − cᵢ);
+ * the minimum keeps the earlier center unless a later distance compares
+ * strictly smaller under Spark's double ordering (NaN above every number),
+ * which is how `least` folds. Null when any element is null (the fold's
+ * null propagation) or the length differs from the centers' (the
+ * CosineSimilarity convention; the fold reads a prefix of an over-long
+ * array and nulls or fails on a short one).
+ */
+case class MinSqDist(child: Expression, centers: Seq[Seq[Double]])
+    extends UnaryExpression {
+
+  require(centers.nonEmpty && centers.head.nonEmpty &&
+    centers.forall(_.length == centers.head.length),
+    s"${VectorFunctions.MinSqDistName} needs non-empty centers of one dimension")
+
+  @transient private lazy val centerArr: Array[Array[Double]] =
+    centers.map(_.toArray).toArray
+
+  override def prettyName: String = VectorFunctions.MinSqDistName
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(DoubleType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName expects array<double> input, got ${other.simpleString}")
+    }
+
+  override def dataType: DataType = DoubleType
+
+  override def nullable: Boolean = true // dimension mismatch / null element → null
+
+  override def nullSafeEval(a: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val dim = centerArr(0).length
+    if (x.numElements() != dim) return null
+    var d0 = 0
+    while (d0 < dim) { if (x.isNullAt(d0)) return null; d0 += 1 }
+    var best = 0.0
+    var k = 0
+    while (k < centerArr.length) {
+      val c = centerArr(k)
+      var t = x.getDouble(0) - c(0)
+      var acc = t * t
+      var i = 1
+      while (i < dim) { t = x.getDouble(i) - c(i); acc += t * t; i += 1 }
+      if (k == 0 || SQLOrderingUtil.compareDoubles(best, acc) > 0) best = acc
+      k += 1
+    }
+    java.lang.Double.valueOf(best)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cRef = ctx.addReferenceObj("minSqDistCenters", centerArr, "double[][]")
+    nullSafeCodeGen(ctx, ev, a => {
+      val dim = ctx.freshName("dim")
+      val bad = ctx.freshName("bad")
+      val best = ctx.freshName("best")
+      val k = ctx.freshName("k")
+      val c = ctx.freshName("c")
+      val t = ctx.freshName("t")
+      val acc = ctx.freshName("acc")
+      val i = ctx.freshName("i")
+      s"""
+         |final int $dim = $cRef[0].length;
+         |boolean $bad = $a.numElements() != $dim;
+         |for (int $i = 0; !$bad && $i < $dim; $i++) { $bad = $a.isNullAt($i); }
+         |if ($bad) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  double $best = 0.0;
+         |  for (int $k = 0; $k < $cRef.length; $k++) {
+         |    final double[] $c = $cRef[$k];
+         |    double $t = $a.getDouble(0) - $c[0];
+         |    double $acc = $t * $t;
+         |    for (int $i = 1; $i < $dim; $i++) {
+         |      $t = $a.getDouble($i) - $c[$i];
+         |      $acc += $t * $t;
+         |    }
+         |    if ($k == 0 || org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles($best, $acc) > 0) {
+         |      $best = $acc;
+         |    }
+         |  }
+         |  ${ev.value} = $best;
+         |}
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/**
+ * Centred projection Σᵢ (xᵢ − μᵢ)·vᵢ onto one literal vector, as one native
+ * codegen pass: the PCA coordinate of q140 (projection), q150
+ * (reconstruction audit) and q275 (whitening). Replaces the 64-term Column
+ * fold of (emb[i] − lit(μᵢ)) * lit(vᵢ); μ and v are constructor constants
+ * shipped into the generated code via addReferenceObj.
+ *
+ * The arithmetic is the fold's, bit for bit: left to right from term 0 (not
+ * 0.0 + term 0, which would turn an all-(−0.0) sum into +0.0), term i being
+ * (xᵢ − μᵢ)·vᵢ in that operand order. Null on a null element or a length
+ * that differs from μ's (see [[MinSqDist]]).
+ */
+case class CenteredDot(child: Expression, mu: Seq[Double], v: Seq[Double])
+    extends UnaryExpression {
+
+  require(mu.nonEmpty && mu.length == v.length,
+    s"${VectorFunctions.CenteredDotName} needs non-empty mu and v of one dimension")
+
+  @transient private lazy val muArr: Array[Double] = mu.toArray
+  @transient private lazy val vArr: Array[Double] = v.toArray
+
+  override def prettyName: String = VectorFunctions.CenteredDotName
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(DoubleType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName expects array<double> input, got ${other.simpleString}")
+    }
+
+  override def dataType: DataType = DoubleType
+
+  override def nullable: Boolean = true // dimension mismatch / null element → null
+
+  override def nullSafeEval(a: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val dim = muArr.length
+    if (x.numElements() != dim) return null
+    var d0 = 0
+    while (d0 < dim) { if (x.isNullAt(d0)) return null; d0 += 1 }
+    var acc = (x.getDouble(0) - muArr(0)) * vArr(0)
+    var i = 1
+    while (i < dim) { acc += (x.getDouble(i) - muArr(i)) * vArr(i); i += 1 }
+    java.lang.Double.valueOf(acc)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val muRef = ctx.addReferenceObj("centeredDotMu", muArr, "double[]")
+    val vRef = ctx.addReferenceObj("centeredDotV", vArr, "double[]")
+    nullSafeCodeGen(ctx, ev, a => {
+      val dim = ctx.freshName("dim")
+      val bad = ctx.freshName("bad")
+      val acc = ctx.freshName("acc")
+      val i = ctx.freshName("i")
+      s"""
+         |final int $dim = $muRef.length;
+         |boolean $bad = $a.numElements() != $dim;
+         |for (int $i = 0; !$bad && $i < $dim; $i++) { $bad = $a.isNullAt($i); }
+         |if ($bad) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  double $acc = ($a.getDouble(0) - $muRef[0]) * $vRef[0];
+         |  for (int $i = 1; $i < $dim; $i++) {
+         |    $acc += ($a.getDouble($i) - $muRef[$i]) * $vRef[$i];
+         |  }
+         |  ${ev.value} = $acc;
+         |}
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object VectorFunctions {
 
   val CosineName = "graft_cosine"
@@ -526,6 +710,8 @@ object VectorFunctions {
   val SrpName = "graft_srp_sig"
   val AndAnyName = "graft_land_any"
   val PqEncodeName = "graft_pq_encode"
+  val MinSqDistName = "min_sqdist"
+  val CenteredDotName = "centered_dot"
 
   /** Default SRP geometry: 16 sign bits over dim-64 embeddings (the
     * fixture contract, pinned in FixtureSchemaSpec). */
@@ -619,4 +805,15 @@ object VectorFunctions {
       }, "built-in")
     call_function(PqEncodeName, emb)
   }
+
+  /** Column-API face of [[MinSqDist]]. The centers are per-call data (a
+    * greedy round's picks, a fixture's mean), so the Column is built
+    * straight from the expression rather than through a registered
+    * session function. */
+  def minSqDist(spark: SparkSession, emb: Column, centers: Seq[Seq[Double]]): Column =
+    GraftPlanApi.column(MinSqDist(GraftPlanApi.expression(spark, emb), centers))
+
+  /** Column-API face of [[CenteredDot]]; built like [[minSqDist]]. */
+  def centeredDot(spark: SparkSession, emb: Column, mu: Seq[Double], v: Seq[Double]): Column =
+    GraftPlanApi.column(CenteredDot(GraftPlanApi.expression(spark, emb), mu, v))
 }

@@ -565,28 +565,26 @@ object SimilarityQueries {
 
     // PCA projection: eigendecompose the q139 covariance on the driver
     // (64×64 control-plane matrix — the k-means-centroid pattern, see
-    // ops/Eigen.scala for the scale rationale), broadcast the top-PcaK
-    // components as literals, and project every embedding in one
-    // codegen'd map stage: each coordinate is a fixed 64-term expression
-    // tree (no interpreted HOF lambda in the hot path — the SrpSignature
-    // lesson), evaluated left-to-right like a sequential fold. Full
-    // oracle since r9 via dynamicOracles: the eigenvector/mean literals
-    // interpolate into the SQL at Verify-dump time and DuckDB re-runs
+    // ops/Eigen.scala for the scale rationale), ship the top-PcaK
+    // components as expression constants, and project every embedding in
+    // one codegen'd map stage: each coordinate is one CenteredDot kernel
+    // (a primitive loop in the generated stage, no interpreted HOF lambda
+    // — the SrpSignature lesson), accumulated left-to-right like a
+    // sequential fold. Full oracle since r9 via dynamicOracles: the
+    // eigenvector/mean literals interpolate into the SQL at Verify-dump time and DuckDB re-runs
     // the identical folds over the raw parquet (the eigensolve itself
     // isn't ANSI SQL — VectorSpec gates orthonormality, trace
     // preservation, Rayleigh residuals, descending order,
     // coordinate-variance ≈ eigenvalue, and sign-fixed determinism).
     "q140_pca_project" -> { (s, dir) =>
       import s.implicits._
-      val d = EmbDim
       val (_, mu, cov) = covStats(s, dir) // 2080 control-plane rows, memoized
       val (_, vecs) = Eigen.symmetric(cov)
       val pcs = (0 until PcaK).map { k =>
-        val v = vecs(k)
         // + 0.0: canonicalize -0.0 (q139 note) — a centered coordinate
         // rounding to zero must hash identically across partition layouts.
-        (round((0 until d).map(i => ($"emb".getItem(i) - lit(mu(i))) * lit(v(i)))
-          .reduce(_ + _), 6) + lit(0d)).as(s"pc$k")
+        (round(VectorFunctions.centeredDot(s, $"emb", mu.toSeq, vecs(k).toSeq), 6) +
+          lit(0d)).as(s"pc$k")
       }
       embs(s, dir).select(($"vec_id" +: pcs): _*).orderBy($"vec_id")
     },
@@ -597,20 +595,18 @@ object SimilarityQueries {
     // clustering when leading components would otherwise dominate
     // distances. The inverse-root eigenvalues are control-plane
     // literals computed next to the eigenvectors; the per-row plan is
-    // the same codegen'd 64-term fold with ONE extra multiply, and the
+    // the same CenteredDot kernel with ONE extra multiply, and the
     // dump-time dynamic oracle replays it literal-for-literal.
     // VectorSpec pins unit variance per whitened coordinate.
     "q275_pca_whiten" -> { (s, dir) =>
       import s.implicits._
-      val d = EmbDim
       val (_, mu, cov) = covStats(s, dir)
       val (lam, vecs) = Eigen.symmetric(cov)
       val ws = (0 until PcaK).map { k =>
         require(lam(k) > 0, s"non-positive eigenvalue $k: ${lam(k)}")
-        val v = vecs(k)
         val inv = 1.0 / math.sqrt(lam(k))
-        (round((0 until d).map(i => ($"emb".getItem(i) - lit(mu(i))) * lit(v(i)))
-          .reduce(_ + _) * lit(inv), 6) + lit(0d)).as(s"w$k")
+        (round(VectorFunctions.centeredDot(s, $"emb", mu.toSeq, vecs(k).toSeq) *
+          lit(inv), 6) + lit(0d)).as(s"w$k")
       }
       embs(s, dir).select(($"vec_id" +: ws): _*).orderBy($"vec_id")
     },
@@ -703,21 +699,18 @@ object SimilarityQueries {
     // measured ≠ theory (VectorSpec pins their agreement; the query is
     // its own audit). One distributed pass per audit: the residual
     // ‖x − μ − Σₖ⟨x−μ,vₖ⟩vₖ‖² expands to ‖x−μ‖² − Σₖ⟨x−μ,vₖ⟩², so the
-    // scan computes k+1 codegen'd dot products per row — no
-    // reconstruction materialized, no second join.
+    // scan computes k+1 kernel calls per row (MinSqDist with the one
+    // center μ, then k CenteredDots) — no reconstruction materialized, no
+    // second join.
     "q150_pca_reconstruction" -> { (s, dir) =>
       import s.implicits._
-      val d = EmbDim
       val (n, mu, cov) = covStats(s, dir)
       val (lam, vecs) = Eigen.symmetric(cov)
       def dotSq(v: Array[Double]): Column = {
-        val p = (0 until d).map(i => ($"emb".getItem(i) - lit(mu(i))) * lit(v(i)))
-          .reduce(_ + _)
+        val p = VectorFunctions.centeredDot(s, $"emb", mu.toSeq, v.toSeq)
         p * p
       }
-      val centeredSq: Column =
-        (0 until d).map(i => ($"emb".getItem(i) - lit(mu(i))) *
-          ($"emb".getItem(i) - lit(mu(i)))).reduce(_ + _)
+      val centeredSq = VectorFunctions.minSqDist(s, $"emb", Seq(mu.toSeq))
       val proj = embs(s, dir).select(
         (centeredSq.as("c2") +: (0 until PcaK).map(k => dotSq(vecs(k)).as(s"p$k"))): _*)
       val agg = proj.agg(avg($"c2").as("c2m"),
@@ -772,18 +765,20 @@ object SimilarityQueries {
     // objective; the seeding geometry k-means++ samples from). Round 1
     // seeds at the lowest vec_id; each later round takes the vector
     // FARTHEST from its nearest already-picked center (ties to the lower
-    // vec_id). Scale shape: k sequential corpus scans, each ONE codegen'd
-    // min-over-≤k-literal-centers distance map + a TakeOrderedAndProject
-    // k=1 reduce — the textbook FPS cost (at larger k, switch to
+    // vec_id). Scale shape: k sequential corpus scans, each ONE MinSqDist
+    // kernel call per row (the ≤k picked centers are an expression
+    // constant, so every round's projection is one node and the same
+    // generated code) + a TakeOrderedAndProject k=1 reduce — the
+    // textbook FPS cost (at larger k, switch to
     // k-means++-style oversampling: sample Θ(k) per scan in O(log k)
     // rounds, then condense; same distance map). Only 1-row argmaxes
     // reach the driver (the KMeans control-plane convention), memoized
     // per (application, dir) so bench iterations don't re-run the loop.
     // Determinism: squared distance is the same left-associated 64-term
-    // fold both engines (q251's d2 builder; centers re-enter Spark as
-    // collected literals, bit-exact), argmax compares raw doubles with
-    // exact-tie fallback to vec_id, and sel_dist rounds once at 6 dp on
-    // emission only.
+    // sum in both engines (the kernel's loop, list_dot_product in the
+    // oracle; centers re-enter Spark as collected doubles, bit-exact),
+    // argmax compares raw doubles with exact-tie fallback to vec_id, and
+    // sel_dist rounds once at 6 dp on emission only.
     "q270_kcenter_coreset" -> { (s, dir) =>
       import s.implicits._
       val picks = kcenterPicks(s, dir)
@@ -805,31 +800,33 @@ object SimilarityQueries {
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Option[Double])]]
 
   /** The greedy FPS loop: (vec_id, selection distance) per round, round 1
-    * seeded at the lowest vec_id with no distance. Distances are squared
-    * euclidean via the fixed left fold over literal centers. */
+    * seeded at the lowest vec_id with no distance. */
   private def kcenterPicks(s: SparkSession, dir: String): Seq[(Long, Option[Double])] =
     kcenterCache.computeIfAbsent(AppCaches.key(s, dir, kcenterCache), { _ =>
       import s.implicits._
       val e = embs(s, dir).select($"vec_id", $"emb")
-      def d2(c: Array[Double]): Column =
-        (0 until EmbDim).map { i =>
-          ($"emb".getItem(i) - lit(c(i))) * ($"emb".getItem(i) - lit(c(i)))
-        }.reduce(_ + _)
       val seed = e.orderBy($"vec_id".asc).limit(1)
         .as[(Long, Seq[Double])].head()
-      var centers = Vector((seed._1, seed._2.toArray, Option.empty[Double]))
+      var centers = Vector((seed._1, seed._2, Option.empty[Double]))
       while (centers.size < KCenterK) {
-        val nearest =
-          if (centers.size == 1) d2(centers.head._2)
-          else least(centers.map(c => d2(c._2)): _*)
-        val next = e.filter(!$"vec_id".isin(centers.map(_._1): _*))
-          .select($"vec_id", $"emb", nearest.as("dist"))
-          .orderBy($"dist".desc, $"vec_id".asc).limit(1)
+        val next = kcenterRound(s, e, centers.map(c => (c._1, c._2)))
           .as[(Long, Seq[Double], Double)].head()
-        centers = centers :+ ((next._1, next._2.toArray, Some(next._3)))
+        centers = centers :+ ((next._1, next._2, Some(next._3)))
       }
       centers.map(c => (c._1, c._3))
     })
+
+  /** One greedy round over (vec_id, emb): the unpicked vector farthest
+    * from its nearest picked center (ties to the lower vec_id), as
+    * (vec_id, emb, dist). Squared euclidean distance via [[MinSqDist]]. */
+  private[graft] def kcenterRound(s: SparkSession, e: DataFrame,
+                                  centers: Seq[(Long, Seq[Double])]): DataFrame = {
+    import s.implicits._
+    e.filter(!$"vec_id".isin(centers.map(_._1): _*))
+      .select($"vec_id", $"emb",
+        VectorFunctions.minSqDist(s, $"emb", centers.map(_._2)).as("dist"))
+      .orderBy($"dist".desc, $"vec_id".asc).limit(1)
+  }
 
   /** Driver-side covariance stats (n, μ, Σ) derived from one coMoments
     * collect — MEMOIZED per (application, fixture dir): q140 and q150
@@ -1139,7 +1136,8 @@ object SimilarityQueries {
     * literals: the covStats means and ops/Eigen's top-PcaK eigenvectors
     * (eigensolves aren't ANSI SQL). The memoized covStats collect is the
     * SAME object the Spark queries read in that JVM, so both engines
-    * evaluate identical 64-term folds over bit-identical literals; the
+    * evaluate identical 64-term left folds over bit-identical constants
+    * (unrolled SQL here, the CenteredDot/MinSqDist kernels in Spark); the
     * oracle then independently re-runs the distributed projection /
     * reconstruction-audit arithmetic over the raw parquet. The eigensolve
     * itself stays gated by VectorSpec (orthonormality, trace, Rayleigh,
@@ -1148,8 +1146,10 @@ object SimilarityQueries {
     val d = EmbDim
     val (n, mu, cov) = covStats(s, dir)
     val (lam, vecs) = Eigen.symmetric(cov)
-    // (emb[i] − μᵢ)·vᵢ summed left-to-right — the exact Column fold
-    // q140/q150 build, so per-row values match bit-for-bit before ROUND.
+    // (emb[i] − μᵢ)·vᵢ summed left-to-right from term 0 — the arithmetic
+    // of the CenteredDot kernel q140/q150/q275 run (and, for centeredSq,
+    // of MinSqDist with the one center μ), so per-row values match
+    // bit-for-bit before ROUND.
     def proj(v: Array[Double]): String =
       (0 until d).map(i =>
         s"(emb[${i + 1}] - ${dlit(mu(i))}) * ${dlit(v(i))}").mkString(" + ")
@@ -1212,7 +1212,7 @@ object SimilarityQueries {
     // q270: the greedy unrolls as one CTE per round (the q72/q130
     // unrolled-iteration convention). Squared distance is
     // list_dot_product over the element-wise diff list — the same
-    // sequential left fold as the Spark side's 64-term column reduce
+    // sequential left fold as the Spark side's MinSqDist kernel loop
     // (q130's PqEncode ≡ list_dot_product precedent) — so the argmax
     // compares bit-identical doubles and ties resolve on vec_id alike.
     "q270_kcenter_coreset" -> {

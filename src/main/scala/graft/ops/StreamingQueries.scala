@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import scala.util.control.NonFatal
 import graft.ops.Tables._
 import graft.streaming.StreamingIngest
 
@@ -83,14 +84,15 @@ object StreamingQueries {
     * a directory-layout parquet table, degenerating the derivation to the
     * floor on exactly the sources that need real state sizing; content
     * summary counts the actual bytes for single files, directory tables and
-    * remote filesystems alike. Unknown/missing paths report 0 — the
+    * remote filesystems alike. Unknown/missing paths and malformed URIs
+    * (Path construction throws IllegalArgumentException) report 0 — the
     * derivation then uses its floor. */
-  private[graft] def fixtureBytes(s: SparkSession, dir: String, table: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
-    catch { case _: java.io.IOException => 0L }
-  }
+  private[graft] def fixtureBytes(s: SparkSession, dir: String, table: String): Long =
+    try {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+      p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+    } catch { case NonFatal(_) => 0L }
 
   /** Scratch checkpoint for the bounded batch-face drains. These streams
     * END inside the call (AvailableNow → memory sink → settled table), so
@@ -166,6 +168,34 @@ object StreamingQueries {
       q.awaitTermination()
     } finally dropScratch(ck)
     s.table(sink)
+  }
+
+  /** The drain for a face whose stream never terminates on its own (TTL
+    * state's processing-time bookkeeping batches, q279): start the query
+    * on a fresh scratch checkpoint, poll until `landed()`, the query dies
+    * or 180 s pass, then surface the query's own exception. The query is
+    * stopped before its checkpoint is dropped on every path, a throwing
+    * poll included: deleting the checkpoint under a still-active query
+    * would leak a running stream that then fails confusingly. */
+  private[graft] def pollDrain(s: SparkSession)(start: String => StreamingQuery)(
+      landed: () => Boolean): Unit = {
+    val ck = scratchCheckpoint(s)
+    var q: StreamingQuery = null
+    try {
+      q = start(ck)
+      // Health-aware poll: a dead query must surface ITS exception
+      // immediately, not a 180 s hang ending in a row-count error
+      // (this drain bypasses awaitTermination's propagation path).
+      val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
+      while (q.isActive && !landed() && System.nanoTime() < deadline)
+        Thread.sleep(50) // fine-grained: the 200 ms quantum added up to
+                         // ~0.2 s of pure wait after the batch landed
+      q.stop()
+      q.exception.foreach(throw _)
+    } finally {
+      if (q != null) try q.stop() catch { case NonFatal(_) => () }
+      dropScratch(ck)
+    }
   }
 
   /** Stage the events fixture as an N-FILE copy — file b<i> = the rows
@@ -487,25 +517,14 @@ object StreamingQueries {
         val src = ntzNorm(s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir))
         val sink = s"graft_stream_q_${nonce.incrementAndGet()}"
-        val ck = scratchCheckpoint(s)
-        try {
-          val q = StreamingIngest.ttlDedupGate(s,
+        pollDrain(s) { ck =>
+          StreamingIngest.ttlDedupGate(s,
               src.filter(col("user_id").isNotNull), "user_id",
               java.time.Duration.ofHours(1)).toDF()
             .writeStream.format("memory").queryName(sink)
             .option("checkpointLocation", ck)
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          // Health-aware poll: a dead query must surface ITS exception
-          // immediately, not a 180 s hang ending in a row-count error
-          // (this drain bypasses awaitTermination's propagation path).
-          val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-          while (q.isActive && s.table(sink).count() < expected &&
-              System.nanoTime() < deadline)
-            Thread.sleep(50) // fine-grained: the 200 ms quantum added up to
-                             // ~0.2 s of pure wait after the batch landed
-          q.stop()
-          q.exception.foreach(throw _)
-        } finally dropScratch(ck)
+        } (() => s.table(sink).count() >= expected)
         require(s.table(sink).count() == expected,
           s"ttl dedup face: sink never reached $expected rows")
         s.table(sink)

@@ -66,10 +66,18 @@ final class JdbcSink(url: String, options: Map[String, String],
   override def appendJob(jobId: String, jobType: String): Unit =
     runDdl(PgDdl.insertJobSql(java.time.Instant.now(), jobId, jobType))
 
+  /** `table` is the feed name, quoted here as [[PgDdl]] quotes it when it
+    * creates the table: Spark passes `dbtable` into its SQL verbatim, so an
+    * unquoted `appStart` would fold to `appstart` (a table PostgreSQL
+    * auto-creates on write) and `transaction` is reserved on some
+    * databases. A name that is already double-quoted passes unchanged. */
   override def write(df: DataFrame, table: String): Unit = {
+    val quoted =
+      if (table.length >= 2 && table.startsWith("\"") && table.endsWith("\"")) table
+      else PgDdl.quoteIdent(table)
     val w = df.write.format("jdbc")
       .option("url", url)
-      .option("dbtable", table)
+      .option("dbtable", quoted)
       .option("batchsize", batchSize.toString)
     options.foldLeft(w) { case (acc, (k, v)) => acc.option(k, v) }
       .mode(SaveMode.Append)
@@ -154,13 +162,16 @@ object PgDdl {
     }
   }
 
+  /** A case-preserving quoted identifier; embedded quotes are doubled. */
+  def quoteIdent(name: String): String = "\"" + name.replace("\"", "\"\"") + "\""
+
   /** CREATE TABLE IF NOT EXISTS with a SERIAL surrogate id, mirroring the
     * reference's autoincrement primary keys (ua2sql.py:40,47,58,72). */
   def createTableSql(feed: FeedSpec): String = {
     val cols = feed.table.fields
-      .map(f => s""""${f.name}" ${pgType(f)}""")
+      .map(f => s"${quoteIdent(f.name)} ${pgType(f)}")
       .mkString(",\n  ")
-    s"""CREATE TABLE IF NOT EXISTS "${feed.name}" (
+    s"""CREATE TABLE IF NOT EXISTS ${quoteIdent(feed.name)} (
        |  id SERIAL PRIMARY KEY,
        |  $cols
        |)""".stripMargin

@@ -22,6 +22,13 @@ object GraftPlanApi {
   def expression(spark: SparkSession, col: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     spark.asInstanceOf[ClassicSparkSession].expression(col)
 
+  /** Catalyst Expression → Column: the inverse of [[expression]]. Lets a
+    * native expression built with per-call constants (literal centers,
+    * projection vectors) become a Column directly, without registering a
+    * session function for data that changes every call. */
+  def column(expr: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(expr)
+
   /** Session-scoped strategy registration that works on ANY session handed
     * to us (the driver contract passes sessions we didn't build), not just
     * ones constructed with `spark.sql.extensions`. Idempotent. */

@@ -133,6 +133,12 @@ class MainSpec extends AnyFunSuite with SparkSuite {
     assert(recorded.exists(_.contains("job-1")))
   }
 
+  test("Prof conf overrides trim entries, keys and values") {
+    assert(Prof.confOverrides("a=1; b = 2 ;;c=x=y; nokv ") ===
+      Seq("a" -> "1", "b" -> "2", "c" -> "x=y"))
+    assert(Prof.confOverrides("") === Seq.empty)
+  }
+
   test("main without staged feeds fails with a clear message") {
     val root = tmp("graft-main-empty")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/staging"))

@@ -65,6 +65,70 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(left.map(_.getName) === Seq("subdir")) // files gone, dirs kept
   }
 
+  test("JdbcSink rows land in the quoted tables the DDL created (embedded Derby)") {
+    import org.apache.spark.sql.types._
+    val root = tmp("graft-derby")
+    System.setProperty("derby.stream.error.file", s"$root/derby.log")
+    val db = s"$root/db"
+    val url = s"jdbc:derby:$db;create=true"
+    def withConn[A](f: java.sql.Connection => A): A = {
+      val c = java.sql.DriverManager.getConnection(url)
+      try f(c) finally c.close()
+    }
+    def exec(sql: String): Unit = withConn { c =>
+      val st = c.createStatement(); try st.execute(sql) finally st.close()
+    }
+    // Derby form of the PgDdl statements: same quoted table names, Derby
+    // types (no IF NOT EXISTS, SERIAL, INET, JSONB or TIMESTAMP '…').
+    val CreateTable = """(?s)CREATE TABLE IF NOT EXISTS "([A-Za-z]+)".*""".r
+    def derbyType(t: DataType, ledger: Boolean): String = t match {
+      case TimestampType => "TIMESTAMP"
+      case LongType => "BIGINT"
+      case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
+      case _ if ledger => "VARCHAR(256)"
+      case _ => "CLOB" // Spark binds NULL strings as CLOB on Derby
+    }
+    val ddl: String => Unit = {
+      case CreateTable(name) =>
+        val ledger = name == "JobId"
+        val fields = if (ledger) Schemas.jobLedger.fields else Schemas.feed(name).table.fields
+        try exec(s"CREATE TABLE \"$name\" (" + fields.map(f =>
+          s"${PgDdl.quoteIdent(f.name)} ${derbyType(f.dataType, ledger)}").mkString(", ") + ")")
+        catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () } // exists
+      case sql => exec("""TIMESTAMP '([^']+)'""".r.replaceAllIn(sql, m => s"TIMESTAMP('${m.group(1)}')"))
+    }
+    val sink = new graft.sink.JdbcSink(url, Map.empty, ddlRunner = Some(ddl))
+    try {
+      val wh = tmp("graft-derby-wh")
+      val ledger = tmp("graft-derby-led") + "/ledger"
+      Seq("appStart" -> "a1", "transaction" -> "t1").foreach { case (feed, job) =>
+        Pipeline.runFeed(spark, Pipeline.FeedRun(Schemas.feed(feed),
+          s"src/test/resources/feeds/$feed/job1", job), wh, ledger, dbSink = Some(sink))
+      }
+      def count(table: String): Long = withConn { c =>
+        val rs = c.createStatement().executeQuery(s"SELECT COUNT(*) FROM ${PgDdl.quoteIdent(table)}")
+        rs.next(); rs.getLong(1)
+      }
+      assert(count("appStart") === 3)
+      assert(count("transaction") === 2)
+      assert(count("JobId") === 2)
+      // no case-folded twin was auto-created beside the DDL's table
+      val tables = withConn { c =>
+        val rs = c.getMetaData.getTables(null, null, "%", Array("TABLE"))
+        Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME")).toSet
+      }
+      assert(tables === Set("appStart", "transaction", "JobId"))
+      // an already-quoted name passes through unchanged
+      sink.write(spark.read.parquet(wh).filter(org.apache.spark.sql.functions.col("jobType") === "appStart")
+        .select(Schemas.feed("appStart").table.fieldNames.map(org.apache.spark.sql.functions.col): _*),
+        "\"appStart\"")
+      assert(count("appStart") === 6)
+    } finally {
+      try java.sql.DriverManager.getConnection(s"jdbc:derby:$db;shutdown=true")
+      catch { case e: java.sql.SQLException if e.getSQLState == "08006" => () }
+    }
+  }
+
   test("parquet sink appends per table") {
     val root = tmp("graft-sink")
     val sink = new ParquetSink(root)

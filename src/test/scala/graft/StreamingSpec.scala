@@ -711,4 +711,34 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       rm(root)
     }
   }
+
+  test("fixtureBytes: a malformed dir URI reports 0 (the floor), not an exception") {
+    import graft.ops.StreamingQueries.fixtureBytes
+    // "ab:c" parses as scheme ab with a relative path: Hadoop's Path throws
+    // IllegalArgumentException (URISyntaxException), not an IOException
+    intercept[IllegalArgumentException](new org.apache.hadoop.fs.Path("ab:c/t.parquet"))
+    assert(fixtureBytes(spark, "ab:c", "t") === 0L)
+  }
+
+  test("pollDrain: a throwing poll stops the stream and drops its checkpoint") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[Long]
+    ms.addData(1L, 2L, 3L)
+    var ck: String = null
+    var id: java.util.UUID = null
+    val err = intercept[IllegalStateException] {
+      graft.ops.StreamingQueries.pollDrain(spark) { c =>
+        ck = c
+        val q = ms.toDF().writeStream.format("memory").queryName("poll_drain_fail")
+          .option("checkpointLocation", c).outputMode("append").start()
+        id = q.id
+        q
+      } (() => throw new IllegalStateException("injected poll failure"))
+    }
+    assert(err.getMessage === "injected poll failure")
+    assert(id != null && !spark.streams.active.exists(_.id == id),
+      "the drained query is still active")
+    assert(ck != null && !new java.io.File(ck).exists(), s"checkpoint $ck left behind")
+  }
 }

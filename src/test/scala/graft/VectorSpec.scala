@@ -147,6 +147,123 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
     assert(bad.isNullAt(0))
   }
 
+  // ------------------------------------ literal-vector kernels (q270, PCA)
+
+  /** Runs `body` with the given session confs, restoring the old values. */
+  private def withConfs[A](kvs: (String, String)*)(body: => A): A = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Whole-stage codegen, then fully interpreted expression evaluation
+    * (`nullSafeEval`); the ANSI flag is the caller's. */
+  private val kernelModes = Seq(
+    "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
+  test("MinSqDist and CenteredDot equal the unrolled Column folds bit for bit") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val d = 64
+    val rnd = new scala.util.Random(270)
+    def vec(scale: Double) = Array.fill(d)(rnd.nextGaussian() * scale)
+    val c0 = vec(1.0)
+    val c1 = vec(0.5)
+    val nanCenter = vec(1.0).updated(5, Double.NaN)
+    // c0 twice: every row ties exactly between centers 0 and 2; the NaN
+    // center probes least()'s ordering (NaN above every number).
+    val centerSets = Seq(Seq(c0.toSeq), Seq(c0.toSeq, c1.toSeq, c0.toSeq),
+      Seq(nanCenter.toSeq, c1.toSeq), Seq(c1.toSeq, nanCenter.toSeq))
+    val mu = vec(0.3).updated(0, 0.0).updated(1, 0.0)
+    val v = vec(1.0)
+    val vNeg = v.map(x => -math.abs(x) - 1e-3)
+    // x = μ with an all-negative v makes every term −0.0: the fold seeded
+    // with term 0 sums to −0.0, a 0.0-seeded loop would give +0.0.
+    val negZeroRow = mu.clone()
+    val rows: Seq[(Long, Seq[Any])] =
+      (0 until 40).map(i => i.toLong -> vec(if (i % 2 == 0) 1.0 else 1e-3).toSeq) ++ Seq(
+        100L -> c0.toSeq,                                       // distance 0, exact tie
+        101L -> negZeroRow.toSeq,                               // −0.0 projection
+        102L -> mu.updated(0, -0.0).updated(1, -0.0).toSeq,     // −0.0 − 0.0 terms
+        103L -> vec(1.0).updated(7, Double.NaN).toSeq,          // NaN element
+        104L -> (vec(1.0).toSeq.updated(9, null)),              // null element
+        105L -> vec(1.0).take(d - 1).toSeq)                     // wrong length (short)
+    val shortId = 105L
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("emb", ArrayType(DoubleType, containsNull = true))))
+    // An RDD-backed frame, so no LocalRelation folding evaluates the
+    // projection at plan time instead of the mode under test.
+    def frame(rs: Seq[(Long, Seq[Any])]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rs.map { case (i, e) => Row(i, e) }, 2), schema)
+    val emb = col("emb")
+    def foldD2(c: Seq[Double]) =
+      (0 until d).map(i => (emb.getItem(i) - lit(c(i))) * (emb.getItem(i) - lit(c(i))))
+        .reduce(_ + _)
+    def foldMin(cs: Seq[Seq[Double]]) =
+      if (cs.size == 1) foldD2(cs.head) else least(cs.map(foldD2): _*)
+    def foldDot(m: Seq[Double], w: Seq[Double]) =
+      (0 until d).map(i => (emb.getItem(i) - lit(m(i))) * lit(w(i))).reduce(_ + _)
+    val pairs =
+      centerSets.map(cs => (VectorFunctions.minSqDist(spark, emb, cs), foldMin(cs))) ++
+        Seq(v, vNeg).map(w => (VectorFunctions.centeredDot(spark, emb, mu.toSeq, w.toSeq),
+          foldDot(mu.toSeq, w.toSeq)))
+    val cols = pairs.zipWithIndex.flatMap { case ((k, f), j) =>
+      Seq(k.as(s"k$j"), f.as(s"f$j")) }
+    def bits(r: Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+    // ANSI on (the queries' default): an out-of-range getItem throws, so
+    // the short row is compared with ANSI off, where the fold reads NULL.
+    for (ansi <- Seq("true", "false"); (mode, confs) <- kernelModes) {
+      val input = if (ansi == "true") rows.filter(_._1 != shortId) else rows
+      val got = withConfs(confs :+ ("spark.sql.ansi.enabled" -> ansi): _*) {
+        frame(input).select(col("id") +: cols: _*).collect()
+      }
+      assert(got.length === input.length)
+      got.foreach { r =>
+        pairs.indices.foreach { j =>
+          assert(bits(r, 1 + 2 * j) === bits(r, 2 + 2 * j),
+            s"row ${r.getLong(0)}, pair $j, $mode, ansi=$ansi")
+        }
+        if (r.getLong(0) == 101L)
+          assert(bits(r, 1 + 2 * (pairs.size - 1)) ===
+            Some(java.lang.Double.doubleToRawLongBits(-0.0)), "x = μ must project to −0.0")
+        if (Set(104L, shortId).contains(r.getLong(0)))
+          assert(r.isNullAt(1) && r.isNullAt(1 + 2 * (pairs.size - 1)))
+      }
+    }
+    // an over-long array is NULL, not the fold's prefix value
+    for ((mode, confs) <- kernelModes) {
+      val r = withConfs(confs: _*) {
+        frame(Seq(1L -> (c0.toSeq :+ 1.0))).select(
+          VectorFunctions.minSqDist(spark, emb, Seq(c0.toSeq)),
+          VectorFunctions.centeredDot(spark, emb, mu.toSeq, v.toSeq)).head()
+      }
+      assert(r.isNullAt(0) && r.isNullAt(1), mode)
+    }
+  }
+
+  test("q270's round projection holds one MinSqDist node, not a 64-term fold") {
+    import graft.functions.MinSqDist
+    import org.apache.spark.sql.catalyst.expressions.{Add, GetArrayItem}
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("emb"))
+    val centers = e.orderBy("vec_id").limit(7).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val plan = graft.ops.SimilarityQueries.kcenterRound(spark, e, centers.toSeq)
+      .queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case x => x }))
+    assert(exprs.count(_.isInstanceOf[MinSqDist]) === 1)
+    assert(!exprs.exists(x => x.isInstanceOf[Add] || x.isInstanceOf[GetArrayItem]),
+      "the round projection still holds an unrolled per-dimension fold")
+  }
+
   test("PQ training objective is monotone non-increasing (Lloyd invariant)") {
     import spark.implicits._
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
