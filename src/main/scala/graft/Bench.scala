@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /**
  * Benchmark main. Prints ONE compact JSON line on stdout for the driver gate.
  *
@@ -17,17 +16,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // noop sink materializes every column of every row (count() would let
     // Catalyst prune most of the plan and flatter the numbers); shared by
     // warmup and the timed loop so the two can never diverge.
@@ -59,18 +49,7 @@ object Bench {
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     // Optional name filter (local iteration / isolating one query's cost
     // in a fresh JVM); the driver never sets it, so gate runs stay full.
-    // Unknown or empty names fail fast — a typo must not produce a clean
-    // zero-query run that reads as a (vacuous) success.
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    only.foreach { names =>
-      val unknown = names.filterNot(SparkEntry.queries.contains)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknown.mkString(", ")}")
-    }
-    val runs = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, _) =>
+    val runs = SparkEntry.selected(sys.env.get("SPARK_GRAFT_BENCH_ONLY")).map { case (name, _) =>
       val samples = (1 to iters).map { _ =>
         val t0 = System.nanoTime()
         try { runToNoop(name); (System.nanoTime() - t0) / 1e9 }

@@ -1,45 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
-/** Optimization-round measurement tool: dump `.explain("formatted")` for
-  * named queries (or every query) to one text file each, so plan claims in
-  * OPTIMIZATION_r*.md are checkable without running Spark (plans/r10/).
-  * Same session shape as Bench so the dumped plans are the benched plans.
+/** The plan-dump main: write `.explain("formatted")` of named queries (or
+  * every query) to one text file each, so plan claims are checkable
+  * without running Spark (plans/r10/), and two dumps compare with
+  * `tools/plandiff.py`. Same session as Bench, so the dumped plans are the
+  * benched plans.
+  * Usage: Plans <sfDir> <outDir> [names-csv]
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    only.foreach { names =>
-      val unknown = names.filterNot(SparkEntry.queries.contains)
-      require(unknown.isEmpty,
-        s"unknown query names: ${unknown.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-          Files.writeString(Paths.get(s"$outDir/$name.txt"), txt)
-          System.err.println(s"[plans] $name ok")
-        } catch { case e: Throwable =>
-          System.err.println(s"[plans] $name failed: ${e.getMessage}")
-        }
+    SparkEntry.selected(args.lift(2)).foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        Files.writeString(Paths.get(s"$outDir/$name.txt"), txt)
+        System.err.println(s"[plans] $name ok")
+      } catch { case e: Throwable =>
+        System.err.println(s"[plans] $name failed: ${e.getMessage}")
       }
+    }
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
-import scala.collection.mutable
 /** Scratch profiling main (optimization round only): run named queries to
   * the noop sink with a listener printing per-job/per-stage wall time.
   * Usage: Prof <sfDir> <names-csv> [iters]
@@ -18,20 +16,10 @@ object Prof {
     val sfDir = args(0)
     val names = args(1).split(",")
     val iters = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Extra conf overrides for overhead experiments, e.g.
     // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false;spark.sql.shuffle.partitions=8"
-    val extra = confOverrides(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      extra = confOverrides(sys.env.getOrElse("SPARK_GRAFT_CONF", "")))
     // TrieMap: the listener bus mutates from its own thread while main
     // clears/iterates — a plain mutable.Map can throw or tear mid-drain.
     val stages = scala.collection.concurrent.TrieMap[Int, (String, Long, Long, Int)]() // id -> (name, submit, done, tasks)

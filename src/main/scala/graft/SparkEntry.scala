@@ -19,6 +19,17 @@ object SparkEntry {
       MultimodalQueries.queries ++ CurationQueries.queries ++
       StatsQueries.queries ++ StreamingQueries.queries
 
+  /** Registry entries sorted by name, restricted to the CSV `only` when
+    * given. Any unknown name fails: a typo must not produce a clean
+    * zero-query run that reads as a success. */
+  def selected(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val names = only.map(_.split(",").toSet)
+    val unknown = names.getOrElse(Set.empty).filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.toSeq.sortBy(_._1).filter { case (n, _) => names.forall(_.contains(n)) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

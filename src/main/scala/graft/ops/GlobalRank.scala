@@ -52,11 +52,10 @@ object GlobalRank {
     * 32-partition pin per rank at any core count) and under-splits a
     * genuinely large rank input on a small-conf cluster. Bytes come from
     * the block manager's storage info for the pinned RDD — exact, already
-    * materialized, driver-side O(partitions); when the pin is a RELIABLE
-    * checkpoint (cluster deployments that set a checkpoint dir) there are
-    * no storage blocks, and the conf count is the honest fallback. An
-    * explicit positive `partitions` argument still wins (tests pin small
-    * counts). */
+    * materialized, driver-side O(partitions); when the input is a caller's
+    * RELIABLE checkpoint there are no storage blocks, and the conf count is
+    * the honest fallback. An explicit positive `partitions` argument still
+    * wins (tests pin small counts). */
   private[graft] def derivedRangePartitions(pinned: DataFrame): Int = {
     val s = pinned.sparkSession
     val target = s.conf.get("spark.graft.rank.targetBytes",
@@ -101,24 +100,28 @@ object GlobalRank {
    * and PIN the result — two downstream jobs must agree on the range
    * partitioning, and `RangePartitioner` re-samples boundaries per
    * planned RDD (reliable checkpoint when a dir is configured — see Pin).
-   * The input pin is dropped as soon as the tagged pin is materialized.
+   * The input pin is a scratch local checkpoint, dropped as soon as the
+   * tagged pin is materialized or its construction fails.
    */
   private def tagByRange(df: DataFrame, order: Seq[Column], partitions: Int): DataFrame = {
     val pinned = df.queryExecution.analyzed match {
       // already a bare pinned frame (e.g. a caller's Pin) — don't copy it
       case _: org.apache.spark.sql.execution.LogicalRDD => df
-      case _ => Pin(df)
+      // always executor-local, not Pin: a reliable checkpoint's files
+      // would outlive the drop below and leak a full input copy per rank
+      case _ => df.localCheckpoint()
     }
-    val n = if (partitions > 0) partitions else derivedRangePartitions(pinned)
-    val tagged = pinned.repartitionByRange(n, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("_gr_mid", monotonically_increasing_id())
-      .withColumn("_gr_pid", shiftright(col("_gr_mid"), 33))
-      .withColumn("_gr_lrn", col("_gr_mid").bitwiseAND(lit(LocalIdxMask)) + lit(1L))
-      .drop("_gr_mid")
-      .transform(Pin(_))
-    if (!(pinned eq df)) dropPin(pinned)
-    tagged
+    // dropped on failure too, so a rank that throws leaves no blocks
+    try {
+      val n = if (partitions > 0) partitions else derivedRangePartitions(pinned)
+      pinned.repartitionByRange(n, order: _*)
+        .sortWithinPartitions(order: _*)
+        .withColumn("_gr_mid", monotonically_increasing_id())
+        .withColumn("_gr_pid", shiftright(col("_gr_mid"), 33))
+        .withColumn("_gr_lrn", col("_gr_mid").bitwiseAND(lit(LocalIdxMask)) + lit(1L))
+        .drop("_gr_mid")
+        .transform(Pin(_))
+    } finally { if (!(pinned eq df)) dropPin(pinned) }
   }
 
   // Control-plane windows: ordered over ≤`partitions` one-row-per-partition

@@ -149,6 +149,33 @@ class GlobalRankSpec extends AnyFunSuite with SparkSuite {
     assert(r === 0.0)
   }
 
+  test("under a reliable checkpoint dir a rank writes only its tagged pin") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-rank-ckpt").toString
+    sc.setCheckpointDir(dir)
+    try {
+      GlobalRank.withGlobalRank(fixture(50), Seq($"v", $"id"), "rk", "n")
+      // the scratch input copy must stay executor-local: its reliable
+      // files would outlive the drop and leak one input copy per rank
+      def rddDirs(p: java.io.File): Seq[java.io.File] =
+        Option(p.listFiles).map(_.toSeq).getOrElse(Nil).filter(_.isDirectory)
+          .flatMap(d => if (d.getName.startsWith("rdd-")) Seq(d) else rddDirs(d))
+      assert(rddDirs(new java.io.File(dir)).size === 1)
+    } finally sc.setCheckpointDir(null)
+  }
+
+  test("a rank whose order does not resolve drops its scratch input pin") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    intercept[org.apache.spark.sql.AnalysisException] {
+      GlobalRank.withGlobalRank(fixture(50), Seq($"no_such_col"), "rk", "n")
+    }
+    // new ids only: earlier suites' pins may be reclaimed meanwhile
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   // ---- plan guards -------------------------------------------------------
 
   /** Unpartitioned WindowExec nodes whose input is NOT reduced to the

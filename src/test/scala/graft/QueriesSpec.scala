@@ -27,6 +27,19 @@ class QueriesSpec extends AnyFunSuite with SparkSuite {
     assert(SparkEntry.queries.size === moduleSizes, "query name collision between modules")
   }
 
+  test("selected: every query sorted, a CSV subset, and unknown names fail by name") {
+    val all = SparkEntry.selected(None).map(_._1)
+    assert(all.size === 288)
+    assert(all === SparkEntry.queries.keys.toSeq.sorted)
+    val subset = SparkEntry.selected(Some("q31_neardup_jaccard,q01_pricing_summary")).map(_._1)
+    assert(subset === Seq("q01_pricing_summary", "q31_neardup_jaccard"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.selected(Some("q01_pricing_summary,q999_typo"))
+    }
+    assert(e.getMessage.contains("q999_typo"))
+    assert(!e.getMessage.contains("q01_pricing_summary"))
+  }
+
   test("BPE merges equal an independent in-memory reference trainer (exhaustive)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -9,12 +9,6 @@ trait SparkSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // cpus pinned: SPARK_GRAFT_CPUS follows the box, test parallelism must not
+  lazy val session: SparkSession = GraftSession.local(cpus = 4)
 }
