@@ -28,55 +28,37 @@ object Bucketing {
   val Buckets = 8
 
   /** Writes `orders` and `customer` co-bucketed by customer key under a
-    * per-process temp warehouse path — AT MOST ONCE per (process, dir) —
-    * and returns the co-located equi-join. Write-once/join-many is the
-    * operator's whole thesis, so repeated invocations (bench iterations,
-    * repeated Verify runs) must pay only the JOIN: the memo below skips
-    * the bucket writes when this process already laid out this `dir`.
+    * per-process temp warehouse path — AT MOST ONCE per (application,
+    * dir) — and returns the co-located equi-join. Write-once/join-many is
+    * the operator's whole thesis, so repeated invocations (bench
+    * iterations, repeated Verify runs) must pay only the JOIN: the
+    * [[AppCaches.memo]] skips the bucket writes when this application
+    * already laid out this `dir`. The catalog entries die with the
+    * SparkContext, so a second application in the same JVM writes again.
     * The path derives from (`dir`, pid): distinct ACROSS processes, so a
     * concurrent test/Verify/Bench pair can't Overwrite-delete each
-    * other's bucket files mid-read; a shutdown hook removes the layout
-    * when the JVM exits cleanly. The saveAsTable names are still
-    * catalog-wide within the process — callers in one process must run
-    * queries sequentially (the Verify/Bench/test contract), and a `dir`
-    * switch within one process (cross-SF sweeps) invalidates the memo
-    * and rewrites. A real deployment points the layout at per-dataset
+    * other's bucket files mid-read; it is removed when the JVM exits
+    * cleanly. The saveAsTable names are catalog-wide within the
+    * application — callers must run queries sequentially (the
+    * Verify/Bench/test contract). The memo holds the two table frames
+    * resolved right after the write, so a `dir` switch (cross-SF sweeps)
+    * repoints the catalog names without disturbing an earlier dir's
+    * frames or files. A real deployment points the layout at per-dataset
     * warehouse storage, where write-once is the whole point. */
   def colocatedOrdersCustomer(s: SparkSession, dir: String): DataFrame = {
-    val pid = ProcessHandle.current().pid()
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-bucketed-${Integer.toHexString(dir.hashCode)}-$pid").toString
-    synchronized {
-      if (!writtenRoot.contains(root)) {
-        writeBucketed(t(s, dir, "orders"), "graft_b_orders", "o_custkey", root)
-        writeBucketed(t(s, dir, "customer"), "graft_b_customer", "c_custkey", root)
-        writtenRoot = Some(root)
-        if (allRoots.add(root) && allRoots.size == 1)
-          Runtime.getRuntime.addShutdownHook(new Thread(() =>
-            allRoots.forEach(r => deleteRecursively(new java.io.File(r)))))
-      }
+    val (orders, c) = AppCaches.memo(s, dir, "bucketedLayout") {
+      val root = AppCaches.scratchDir(sys.props("java.io.tmpdir"),
+        s"graft-bucketed-${Integer.toHexString(dir.hashCode)}-" +
+          ProcessHandle.current().pid()).toString
+      writeBucketed(t(s, dir, "orders"), "graft_b_orders", "o_custkey", root)
+      writeBucketed(t(s, dir, "customer"), "graft_b_customer", "c_custkey", root)
+      (s.table("graft_b_orders"), s.table("graft_b_customer"))
     }
     // merge hint: at fixture scale Catalyst would broadcast the customer
     // side and hide the co-location property; at the scales bucketing is
     // FOR, neither side broadcasts and SMJ is what the planner picks anyway
-    val o = s.table("graft_b_orders").hint("merge")
-    val c = s.table("graft_b_customer")
+    val o = orders.hint("merge")
     o.join(c, o("o_custkey") === c("c_custkey"))
-  }
-
-  // The memo holds ONE root (the catalog table names are process-global,
-  // so only the most recent layout is addressable anyway); a dir switch
-  // replaces it and the writes run again for the new dir — including a
-  // RETURN to an earlier dir, whose files survive but whose catalog
-  // entries were repointed. `allRoots` remembers every layout this
-  // process created so the single shutdown hook removes them all.
-  @volatile private var writtenRoot: Option[String] = None
-  private val allRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = Option(f.listFiles()).getOrElse(Array.empty)
-    children.foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   private def writeBucketed(df: DataFrame, name: String, key: String,

@@ -877,15 +877,14 @@ object CurationQueries {
   /** q274: length-bucket width in characters; buckets cap at 9. */
   private[graft] val IpfBucketChars = 512L
 
-  private val ipfCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Long, Long, Double, Double)]]
-
   /** The collected matrix + driver-side raking loop (control-plane:
     * ≤ |sources|·10 cells). Returns (source, bucket, tokens, fitted,
-    * weight) rows; see the q274 registration comment for determinism. */
+    * weight) rows; see the q274 registration comment for determinism.
+    * Memoized per (application, dir): without it q274's warm median is
+    * about 2× (sf0.1, 5-iteration pairs, SCALE.md memo table). */
   private def ipfCells(s: SparkSession, dir: String)
       : Seq[(String, Long, Long, Double, Double)] =
-    ipfCache.computeIfAbsent(AppCaches.key(s, dir, ipfCache), { _ =>
+    AppCaches.memo(s, dir, "ipfCells") {
       import s.implicits._
       val cells = t(s, dir, "documents").filter($"text".isNotNull)
         .select($"source",
@@ -923,7 +922,7 @@ object CurationQueries {
         val v = x((src, b))
         (src, b, m, r6(v), r6(v / m.toDouble))
       }
-    })
+    }
 
   /** Hashed-feature space size for q141 (DSIR). */
   private val DsirBuckets = 256

@@ -875,12 +875,7 @@ object DedupQueries {
     * post-filter explode + distinct handled ~65M rows on this
     * near-template fixture where most grams ARE duplicated). */
   private[graft] def substrDupRuns(s: SparkSession, dir: String): DataFrame =
-    substrRunsCache.computeIfAbsent(
-      AppCaches.key(s, dir, substrRunsCache),
-      { _ => buildSubstrDupRuns(s, dir).cache() })
-
-  private val substrRunsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    AppCaches.memo(s, dir, "substrRuns")(buildSubstrDupRuns(s, dir).cache())
 
   private def buildSubstrDupRuns(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1025,18 +1020,12 @@ object DedupQueries {
     * candidate generation only needs a conservative bound; verification
     * is the exact LONG chain. */
   private[graft] def tfidfPrefixIndexed(s: SparkSession, dir: String)
-      : DataFrame =
+      : DataFrame = {
     // The index is the persistable corpus artifact of this family (at
     // scale it lives on disk next to the corpus, like q85's persistent
-    // LSH index); per-(application, fixture) memo + cache() follows the
-    // tfidfVectors convention so bench iterations don't re-run the
-    // per-doc prefix window.
-    tfidfPrefixIndexCache.computeIfAbsent(
-      AppCaches.key(s, dir, tfidfPrefixIndexCache),
-      { _ => buildTfidfPrefixIndexed(s, dir).cache() })
-
-  private def buildTfidfPrefixIndexed(s: SparkSession, dir: String)
-      : DataFrame = {
+    // LSH index). Its one caller is tfidfPrefixCandidates' memoized
+    // build, so it is built once per (application, fixture); cache()
+    // feeds both sides of that self-join.
     val (sparse, dense, _) = tfidfVectors(s, dir)
     val xw = sparse.join(dense.select(col("doc_id"), col("n2")), "doc_id")
       .select(col("doc_id"), col("idx"), col("df"),
@@ -1052,6 +1041,7 @@ object DedupQueries {
       .withColumn("b2", sum(col("xw") * col("xw")).over(byDoc))
       .filter(col("bmw") >= eps && col("b2") >= eps * eps)
       .select(col("doc_id"), col("idx"))
+      .cache()
   }
 
   /** q256's candidate pairs (da < db) — the All-Pairs inverted-index
@@ -1082,9 +1072,8 @@ object DedupQueries {
     // enumeration is its SHAPE (cost ∝ Σ df_indexed(f)², never docs²),
     // which is what survives an open-vocab corpus where background
     // similarity is low.
-    tfidfCandidateCache.computeIfAbsent(
-      AppCaches.key(s, dir, tfidfCandidateCache),
-      { _ => buildTfidfPrefixCandidates(s, dir).cache() })
+    AppCaches.memo(s, dir, "tfidfCandidates")(
+      buildTfidfPrefixCandidates(s, dir).cache())
 
   private def buildTfidfPrefixCandidates(s: SparkSession, dir: String)
       : DataFrame = {
@@ -1122,9 +1111,7 @@ object DedupQueries {
     // plans would NOT canonicalize equal and q245/q256 (and bench
     // iterations) would each re-materialize `dense` instead of sharing
     // one InMemoryRelation.
-    tfidfFramesCache.computeIfAbsent(
-      AppCaches.key(s, dir, tfidfFramesCache),
-      { _ => buildTfidfVectors(s, dir) })
+    AppCaches.memo(s, dir, "tfidfFrames")(buildTfidfVectors(s, dir))
 
   private def buildTfidfVectors(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, Int) = {
@@ -1137,11 +1124,9 @@ object DedupQueries {
     val w = tf.join(dfr, "tk").crossJoin(broadcast(nn))
       .select(col("doc_id"), col("tk"), col("df"),
         expr(s"(tf * ${TfidfQuantum}L * n) div df").as("wq"))
-    val (vocab, maxWq) = tfidfVocabCache.computeIfAbsent(
-      AppCaches.key(s, dir, tfidfVocabCache), { _ =>
-        (dfr.select(col("tk")).orderBy(col("tk")).collect().map(_.getString(0)),
-          w.agg(max(col("wq"))).collect()(0).getLong(0))
-      })
+    val vocab = dfr.select(col("tk")).orderBy(col("tk")).collect()
+      .map(_.getString(0))
+    val maxWq = w.agg(max(col("wq"))).collect()(0).getLong(0)
     val v = vocab.length
     require(v <= 4096, s"dense tf-idf path assumes a vocabulary-bounded " +
       s"feature space (got $v terms); for open vocabularies run the " +
@@ -1166,18 +1151,6 @@ object DedupQueries {
       .cache()
     (sparse, dense, v)
   }
-
-  private val tfidfVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[String], Long)]
-
-  private val tfidfFramesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame, Int)]
-
-  private val tfidfPrefixIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-
-  private val tfidfCandidateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
 
   /** q245: sparse-cosine report threshold (literal, shared with the
     * oracle; the gate compares bit-identical doubles, see the query). */

@@ -796,13 +796,10 @@ object SimilarityQueries {
     * greedy still runs multiple genuinely distance-driven rounds. */
   private[graft] val KCenterK = 8
 
-  private val kcenterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Option[Double])]]
-
   /** The greedy FPS loop: (vec_id, selection distance) per round, round 1
     * seeded at the lowest vec_id with no distance. */
   private def kcenterPicks(s: SparkSession, dir: String): Seq[(Long, Option[Double])] =
-    kcenterCache.computeIfAbsent(AppCaches.key(s, dir, kcenterCache), { _ =>
+    AppCaches.memo(s, dir, "kcenterPicks") {
       import s.implicits._
       val e = embs(s, dir).select($"vec_id", $"emb")
       val seed = e.orderBy($"vec_id".asc).limit(1)
@@ -814,7 +811,7 @@ object SimilarityQueries {
         centers = centers :+ ((next._1, next._2, Some(next._3)))
       }
       centers.map(c => (c._1, c._3))
-    })
+    }
 
   /** One greedy round over (vec_id, emb): the unpicked vector farthest
     * from its nearest picked center (ties to the lower vec_id), as
@@ -833,11 +830,8 @@ object SimilarityQueries {
     * both need them, and a 3-iteration bench would otherwise rerun the
     * identical 2080-row control-plane aggregation five extra times (the
     * q91 layout-memo lesson). The cache holds ~4 KB per fixture dir. */
-  private val covStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Array[Double], Array[Array[Double]])]
-
   private def covStats(s: SparkSession, dir: String): (Long, Array[Double], Array[Array[Double]]) =
-    covStatsCache.computeIfAbsent(AppCaches.key(s, dir, covStatsCache), { _ =>
+    AppCaches.memo(s, dir, "covStats") {
       val d = EmbDim
       val rows = coMoments(s, dir).collect()
       val sx = Array.ofDim[Double](d)
@@ -851,7 +845,7 @@ object SimilarityQueries {
         cov(i)(j) = c; cov(j)(i) = c
       }
       (n, sx.map(_ / n), cov)
-    })
+    }
 
   /** Upper-triangle co-moment aggregate over embeddings: one row per
     * (i ≤ j) dimension pair with n, Σxᵢ, Σxⱼ, Σxᵢxⱼ — covariance and

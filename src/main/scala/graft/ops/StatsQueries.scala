@@ -245,12 +245,6 @@ object StatsQueries {
     * operator, not a tolerance). */
   val LogregIters = 25
 
-  /** q252: hot-block set, memoized per (application, dir) — the block
-    * SIZES collect is control-plane but a 3-iteration bench must not
-    * re-run the groupBy per iteration (the layout-memo lesson). */
-  private val fsHotBlocksCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Set[Any]]
-
   /** q243 oracle: unrolled peel rounds. 25 design-bounded brand nodes ⇒
     * ≤ 24 removal rounds + 1 stable round per k-slice; 26 is provably a
     * fixpoint for every k (see the oracle's comment). */
@@ -411,29 +405,7 @@ object StatsQueries {
   // 3-iteration bench would otherwise re-aggregate the fact table once
   // per consumer per iteration. The cached object is the lazily-pinned
   // DataFrame; its checkpoint blocks materialize on first action and
-  // live for the app. Entries are EVICTED when their application ends
-  // (a per-app SparkListener) so a JVM that cycles SparkSessions doesn't
-  // pin dead sessions' plans forever.
-  private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-  private val evictionHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def memo(s: SparkSession, name: String, dir: String)
-                  (build: => DataFrame): DataFrame = {
-    val app = s.sparkContext.applicationId
-    if (evictionHooked.add(app))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          frameCache.keySet.removeIf(_.contains(s"@$app@"))
-          manifestCache.keySet.removeIf(_.contains(s"@$app@"))
-          logregCache.keySet.removeIf(_.startsWith(s"$app@"))
-          evictionHooked.remove(app): Unit
-        }
-      })
-    frameCache.computeIfAbsent(s"$name@$app@$dir", _ => build)
-  }
+  // live for the app.
 
   /**
    * Day-granularity revenue frame: one row per calendar order day with
@@ -444,7 +416,7 @@ object StatsQueries {
    * per branch would re-scan the corpus.
    */
   private def dailyRevenueCents(s: SparkSession, dir: String): DataFrame =
-    memo(s, "day", dir) {
+    AppCaches.memo(s, dir, "day") {
       import s.implicits._
       Pin.lazily(t(s, dir, "orders")
         .groupBy(to_date($"o_orderdate").as("d"))
@@ -485,7 +457,7 @@ object StatsQueries {
    * broadcast part dim. One shuffle at (order, brand) digest granularity.
    */
   private def brandBaskets(s: SparkSession, dir: String): DataFrame =
-    memo(s, "baskets", dir) {
+    AppCaches.memo(s, dir, "baskets") {
       import s.implicits._
       Pin.lazily(t(s, dir, "lineitem")
         .join(broadcast(t(s, dir, "part")), $"l_partkey" === $"p_partkey")
@@ -501,68 +473,41 @@ object StatsQueries {
    * memoizing the ≤|brands|² result means it runs once per application,
    * not once per consumer per bench iteration.
    */
-  private def brandPairCounts(s: SparkSession, dir: String): DataFrame = {
-    // Resolve the basket dependency BEFORE entering this frame's memo:
-    // computeIfAbsent is not reentrant on the same map, and nesting the
-    // two lookups threw ConcurrentHashMap's "Recursive update" whenever
-    // the pair frame was requested before the basket frame (q165/q170
-    // running ahead of q158 in a full Verify — the targeted runs always
-    // warmed baskets first and masked it).
-    import s.implicits._
-    val bb = brandBaskets(s, dir)
-    memo(s, "brandpairs", dir) {
+  private def brandPairCounts(s: SparkSession, dir: String): DataFrame =
+    AppCaches.memo(s, dir, "brandpairs") {
+      import s.implicits._
+      val bb = brandBaskets(s, dir)
       Pin.lazily(bb.as("a")
         .join(bb.as("b"), $"a.ok" === $"b.ok" && $"a.brand" < $"b.brand")
         .select($"a.brand".as("brand_a"), $"b.brand".as("brand_b"))
         .groupBy($"brand_a", $"brand_b").agg(count(lit(1)).as("pair_n")))
     }
-  }
 
   /**
    * q174's price-sorted layout + stats manifest, memoized per
    * (application, fixture dir): the orders fact is rewritten ONCE into 16
    * range-sorted shards under a per-process temp root (distinct across
    * processes so concurrent Verify/Bench runs can't clobber each other's
-   * files; a shutdown hook removes them), and the per-file (rows,min,max)
+   * files; removed at JVM exit), and the per-file (rows,min,max)
    * manifest is collected once — every later pruned scan is pure
    * control-plane file selection plus the residual filter.
    */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, Long, Double, Double)]]
-  private val manifestRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private val cleanupHookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private def priceManifest(s: SparkSession, dir: String): Array[(String, Long, Double, Double)] = {
-    val app = s.sparkContext.applicationId
-    manifestCache.computeIfAbsent(
-      "manifest@" + app + "@" + dir, { _ =>
-        import s.implicits._
-        // root keyed by (dir, pid, APPLICATION) to match the memo key — a
-        // second SparkSession in the same JVM must not Overwrite the files
-        // a first session's cached manifest still points at (review
-        // finding); the hook arms exactly once via compareAndSet.
-        val pid = ProcessHandle.current().pid()
-        val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-          s"graft-manifest-${Integer.toHexString((dir + "@" + app).hashCode)}-$pid").toString
-        Layout.sortedShards(
-            t(s, dir, "orders").select($"o_orderkey", $"o_custkey", $"o_totalprice"),
-            Seq("o_totalprice"), 16)
-          .write.mode("overwrite").parquet(root)
-        manifestRoots.add(root)
-        if (cleanupHookArmed.compareAndSet(false, true))
-          Runtime.getRuntime.addShutdownHook(new Thread(() =>
-            manifestRoots.forEach { r =>
-              def del(f: java.io.File): Unit = {
-                Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
-                f.delete(): Unit
-              }
-              del(new java.io.File(r))
-            }))
-        Layout.statsManifest(s, root, "o_totalprice")
-      })
-  }
+  private def priceManifest(s: SparkSession, dir: String): Array[(String, Long, Double, Double)] =
+    AppCaches.memo(s, dir, "priceManifest") {
+      import s.implicits._
+      // root keyed by (dir, pid, APPLICATION) to match the memo key — a
+      // second SparkSession in the same JVM must not Overwrite the files
+      // a first session's cached manifest still points at
+      val app = s.sparkContext.applicationId
+      val root = AppCaches.scratchDir(sys.props("java.io.tmpdir"),
+        s"graft-manifest-${Integer.toHexString((dir + "@" + app).hashCode)}-" +
+          ProcessHandle.current().pid()).toString
+      Layout.sortedShards(
+          t(s, dir, "orders").select($"o_orderkey", $"o_custkey", $"o_totalprice"),
+          Seq("o_totalprice"), 16)
+        .write.mode("overwrite").parquet(root)
+      Layout.statsManifest(s, root, "o_totalprice")
+    }
 
   /**
    * Standardized feature frame for the quality-classifier family (q181
@@ -573,7 +518,7 @@ object StatsQueries {
    * rate oscillate instead of descend).
    */
   private def logregFeatures(s: SparkSession, dir: String): DataFrame =
-    memo(s, "logregfeats", dir) {
+    AppCaches.memo(s, dir, "logregfeats") {
       import s.implicits._
       val raw = Pin.lazily(t(s, dir, "documents")
         .filter($"text".isNotNull)
@@ -619,49 +564,42 @@ object StatsQueries {
   /** 25-iteration batch-gradient logistic fit over [[logregFeatures]];
     * memoized per (application, dir) — train/gains/AUC all consume the
     * same weights, and a bench run must not retrain per consumer per
-    * iteration. Returns (weights, final training loss). The feature
-    * frame resolves BEFORE the cache lambda (the computeIfAbsent
-    * reentrancy lesson — different map here, same discipline). */
-  private val logregCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Double], Double)]
-
-  private def logregFit(s: SparkSession, dir: String): (Seq[Double], Double) = {
-    val feats = logregFeatures(s, dir)
-    logregCache.computeIfAbsent(
-      AppCaches.key(s, dir, logregCache), { _ =>
-        import s.implicits._
-        var w = Seq(0.0, 0.0, 0.0, 0.0)
-        val lr = 0.5
-        var lastLoss = Double.NaN
-        // Gradient and loss sums ride e12 fixed-point (ORACLE.md rule 4):
-        // float avg over the corpus was partition-order-dependent, and
-        // the q181 oracle replays the identical 25-round chain (the
-        // unrolled-arithmetic convention, see q157/q72).
-        def q12(c: Column): Column = sum(floor(c * lit(1e12)).cast(dec))
-        def over(d: java.math.BigDecimal, n: Long): Double =
-          (d.doubleValue / 1e12) / n
-        for (_ <- 1 to LogregIters) {
-          val p = lit(1.0) / (lit(1.0) + exp(-logregScore(w)(s)))
-          // Saturated-sigmoid guard (loss only; gradients use raw p): a
-          // p of exactly 1.0/0.0 — attainable at larger SF after 25
-          // rounds at lr 0.5 — makes the loss term 0·(−Inf) = NaN, which
-          // Spark's floor() feeds the decimal sum as a silent 0 while
-          // DuckDB's CAST(FLOOR(NaN) AS HUGEINT) raises. Clamp with the
-          // SAME literals as the oracle's ln() arguments.
-          val pc = least(greatest(p, lit(1e-12)), lit(1.0) - lit(1e-12))
-          val g = feats.agg(count(lit(1)).as("n"),
-            q12((p - $"y") * $"x0").as("g0"), q12((p - $"y") * $"x1").as("g1"),
-            q12((p - $"y") * $"x2").as("g2"), q12((p - $"y") * $"x3").as("g3"),
-            q12(-($"y" * log(pc) + (lit(1.0) - $"y") * log(lit(1.0) - pc))).as("loss"))
-            .collect().head
-          val n = g.getLong(0)
-          w = w.zipWithIndex.map { case (wi, i) =>
-            wi - lr * over(g.getDecimal(i + 1), n) }
-          lastLoss = over(g.getDecimal(5), n)
-        }
-        (w, lastLoss)
-      })
-  }
+    * iteration. Returns (weights, final training loss). */
+  private def logregFit(s: SparkSession, dir: String): (Seq[Double], Double) =
+    AppCaches.memo(s, dir, "logregFit") {
+      import s.implicits._
+      val feats = logregFeatures(s, dir)
+      var w = Seq(0.0, 0.0, 0.0, 0.0)
+      val lr = 0.5
+      var lastLoss = Double.NaN
+      // Gradient and loss sums ride e12 fixed-point (ORACLE.md rule 4):
+      // float avg over the corpus was partition-order-dependent, and
+      // the q181 oracle replays the identical 25-round chain (the
+      // unrolled-arithmetic convention, see q157/q72).
+      def q12(c: Column): Column = sum(floor(c * lit(1e12)).cast(dec))
+      def over(d: java.math.BigDecimal, n: Long): Double =
+        (d.doubleValue / 1e12) / n
+      for (_ <- 1 to LogregIters) {
+        val p = lit(1.0) / (lit(1.0) + exp(-logregScore(w)(s)))
+        // Saturated-sigmoid guard (loss only; gradients use raw p): a
+        // p of exactly 1.0/0.0 — attainable at larger SF after 25
+        // rounds at lr 0.5 — makes the loss term 0·(−Inf) = NaN, which
+        // Spark's floor() feeds the decimal sum as a silent 0 while
+        // DuckDB's CAST(FLOOR(NaN) AS HUGEINT) raises. Clamp with the
+        // SAME literals as the oracle's ln() arguments.
+        val pc = least(greatest(p, lit(1e-12)), lit(1.0) - lit(1e-12))
+        val g = feats.agg(count(lit(1)).as("n"),
+          q12((p - $"y") * $"x0").as("g0"), q12((p - $"y") * $"x1").as("g1"),
+          q12((p - $"y") * $"x2").as("g2"), q12((p - $"y") * $"x3").as("g3"),
+          q12(-($"y" * log(pc) + (lit(1.0) - $"y") * log(lit(1.0) - pc))).as("loss"))
+          .collect().head
+        val n = g.getLong(0)
+        w = w.zipWithIndex.map { case (wi, i) =>
+          wi - lr * over(g.getDecimal(i + 1), n) }
+        lastLoss = over(g.getDecimal(5), n)
+      }
+      (w, lastLoss)
+    }
 
   /** Directed co-occurrence edges between brands (both directions), with
     * weights = number of baskets containing both — derived narrowly from
@@ -4025,13 +3963,14 @@ object StatsQueries {
       // else joins with salt 0 and zero replication cost. Multiplicity
       // is preserved exactly, so the result EQUALS the unsalted join —
       // the unchanged DuckDB oracle is the equality gate (q60 pattern).
-      val hotBlks: Set[Any] = fsHotBlocksCache.computeIfAbsent(
-        AppCaches.key(s, dir, fsHotBlocksCache), { _ =>
-          val sizes = parts.groupBy($"blk").agg(count(lit(1)).as("c"))
-            .collect().map(r => (r.getString(0), r.getLong(1)))
-          val meanBlk = sizes.map(_._2).sum.toDouble / math.max(1, sizes.length)
-          sizes.filter(_._2 > FsHotFactor * meanBlk).map(_._1).toSet
-        })
+      // The sizes collect is memoized per (application, dir): without it
+      // q252's warm median ran 0.95–1.24× (sf0.1, SCALE.md memo table).
+      val hotBlks: Set[Any] = AppCaches.memo(s, dir, "fsHotBlocks") {
+        val sizes = parts.groupBy($"blk").agg(count(lit(1)).as("c"))
+          .collect().map(r => (r.getString(0), r.getLong(1)))
+        val meanBlk = sizes.map(_._2).sum.toDouble / math.max(1, sizes.length)
+        sizes.filter(_._2 > FsHotFactor * meanBlk).map(_._1).toSet
+      }
       def side(sfx: String): DataFrame = parts.select(
         $"p_partkey".as(s"key_$sfx"), $"p_name".as(s"name_$sfx"),
         $"p_brand".as(s"brand_$sfx"), $"p_type".as(s"type_$sfx"),

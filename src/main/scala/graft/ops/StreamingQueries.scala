@@ -119,20 +119,14 @@ object StreamingQueries {
       "ck_" + java.util.UUID.randomUUID().toString).getAbsolutePath
   }
 
-  private def dropScratch(path: String): Unit = rmRec(new java.io.File(path))
-
-  private def rmRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmRec))
-    f.delete(); ()
-  }
+  private def dropScratch(path: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path)): Unit
 
   private lazy val scratchRoot: java.io.File = {
     val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val root = java.nio.file.Files.createTempDirectory(base, "graft_ck_").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rmRec(root)))
-    root
+    val base = if (shm.isDirectory && shm.canWrite) shm.getPath
+      else System.getProperty("java.io.tmpdir")
+    AppCaches.scratchDir(base, "graft_ck_" + java.util.UUID.randomUUID())
   }
 
   /** Run `build(stream)` over a fixture table read AS A STREAM, collect
@@ -217,27 +211,15 @@ object StreamingQueries {
     * because the checkpoint lives with the query, not the staging. */
   private def stageEventsSplit(s: SparkSession, dir: String, face: String,
       parts: Seq[Column]): String =
-    stageCache.computeIfAbsent(
-      AppCaches.key(s, dir, stageCache) + "#" + face,
-      { _ => buildStagedSplit(s, dir, parts) })
-
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    AppCaches.memo(s, dir, "stage#" + face)(buildStagedSplit(s, dir, parts))
 
   private def buildStagedSplit(s: SparkSession, dir: String,
       parts: Seq[Column]): String = {
     val ev = ntzNorm(s.read.parquet(s"$dir/events.parquet"))
-    val root = java.nio.file.Files.createTempDirectory("graft_stage_").toFile
-    // deleteOnExit can't remove a non-empty directory — register a
-    // recursive cleanup instead so repeated Verify/Bench JVMs don't
-    // accumulate staged copies under the temp filesystem.
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(root)
-    }))
+    // removed at JVM exit so repeated Verify/Bench JVMs don't
+    // accumulate staged copies under the temp filesystem
+    val root = AppCaches.scratchDir(System.getProperty("java.io.tmpdir"),
+      "graft_stage_" + java.util.UUID.randomUUID())
     val stage = new java.io.File(root, "stage")
     stage.mkdirs()
     def writeOne(df: DataFrame, name: String, mtime: Long): Long = {

@@ -35,22 +35,18 @@ object Tables {
    * as plain TIMESTAMP) assumes UTC wall-clock instants, so normalize every
    * NTZ column to TimestampType here: under the UTC session zone the cast is
    * instant-preserving and byte-identical to the pre-3.4 read path.
+   *
+   * Plan-level read memo: `spark.read.parquet` pays a driver-side file
+   * listing + footer schema read PER CALL, and a 280-query bench
+   * resolves the same ~10 fixture tables thousands of times. Memoizing
+   * the ANALYZED FRAME (relation + schema — never row data; every use
+   * still scans parquet) is what a catalog table gives you for free,
+   * and at 100 TB the avoided re-listing of a large table's files is
+   * the guide §6 "file listing" cost.
    */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    tableCache.computeIfAbsent(
-      AppCaches.key(spark, dir, tableCache) + "#" + name,
-      { _ => ntzNorm(spark.read.parquet(s"$dir/$name.parquet")) })
-
-  /** Plan-level read memo: `spark.read.parquet` pays a driver-side file
-    * listing + footer schema read PER CALL, and a 280-query bench
-    * resolves the same ~10 fixture tables thousands of times. Memoizing
-    * the ANALYZED FRAME (relation + schema — never row data; every use
-    * still scans parquet) is what a catalog table gives you for free,
-    * and at 100 TB the avoided re-listing of a large table's files is
-    * the guide §6 "file listing" cost. Evicted with the application via
-    * [[AppCaches]] like every other control-plane memo. */
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    AppCaches.memo(spark, dir, "table#" + name)(
+      ntzNorm(spark.read.parquet(s"$dir/$name.parquet")))
 
   /** The NTZ→UTC-instant cast chain applied to an already-read frame —
     * split out so STREAMING readers (which need an explicit schema and

@@ -14,14 +14,15 @@ both-sides-succeeded comparison (0.96x) dissolved."""
 import argparse, json, statistics
 
 
-def medians(path):
+def load(path):
+    """(per-query median, per-query raw samples) of one bench_detail.json."""
     with open(path) as f:
-        d = json.load(f)
-    out = {}
-    for name, samples in d["runs"].items():
+        runs = json.load(f)["runs"]
+    med = {}
+    for name, samples in runs.items():
         ok = [s for s in samples if s >= 0]
-        out[name] = round(statistics.median(ok), 3) if ok else -1.0
-    return out
+        med[name] = round(statistics.median(ok), 3) if ok else -1.0
+    return med, runs
 
 
 def main():
@@ -33,7 +34,7 @@ def main():
     ap.add_argument("--sf", default="")
     ap.add_argument("--out", default="BENCH_AB.json")
     a = ap.parse_args()
-    old, new = medians(a.old), medians(a.new)
+    (old, old_samples), (new, new_samples) = load(a.old), load(a.new)
     registered_both = sorted(set(old) & set(new))
     failed_old = sorted(q for q in registered_both if old[q] < 0)
     failed_new = sorted(q for q in registered_both if new[q] < 0)
@@ -45,6 +46,8 @@ def main():
             "old": old[q],
             "new": new[q],
             "ratio": round(new[q] / old[q], 3) if old[q] > 0 else None,
+            "old_samples": old_samples[q],
+            "new_samples": new_samples[q],
         }
         for q in common
     }
