@@ -86,10 +86,10 @@ object Bench {
     val failedJson = failed.map(shortKey).sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Worst relative spread across queries (max-min over median) as a single
     // scalar noise indicator; the per-query breakdown lives in the detail file.
-    val spreads = runs.collect { case (n, s) if s.forall(_ >= 0) && s.size > 1 =>
-      n -> (s.max - s.min) / math.max(s.sorted.apply(s.size / 2), 1e-9)
-    }
-    val worst = if (spreads.isEmpty) ("", 0.0) else spreads.maxBy(_._2)
+    // warm_max_spread leaves out each query's first sample, whose memo-cold
+    // build would otherwise read as box noise.
+    val worst = worstSpread(runs, skip = 0)
+    val warmWorst = worstSpread(runs, skip = 1)
     val detail = runs.map { case (n, s) =>
       s"\"" + n + "\":[" + s.map(ms).mkString(",") + "]"
     }.mkString("{\"runs\":{", ",", "},\"iters\":" + iters + "}")
@@ -101,7 +101,7 @@ object Bench {
     // stdout, so if the line ever outgrows the buffer again it is the head
     // (per-query map) that is lost, not the headline total. With short
     // keys the whole line is ~1.2KB; warn loudly if it creeps back up.
-    val suffix = s""","failed":$failedJson,"sf":"$sfDir","iters":$iters,"max_spread":${ms(worst._2)},"metric":"total","value":$total,"unit":"sec"}"""
+    val suffix = s""","failed":$failedJson,"sf":"$sfDir","iters":$iters,"max_spread":${ms(worst)},"warm_max_spread":${ms(warmWorst)},"metric":"total","value":$total,"unit":"sec"}"""
     val full = "{\"queries\":" + qs + suffix
     // The driver buffers a bounded 2000-char TAIL of stdout and parses the
     // line it kept. Past ~180 queries the full per-query map cannot fit
@@ -136,5 +136,16 @@ object Bench {
       System.err.println(s"[bench] WARNING stdout line ${line.length} chars — exceeds the driver's 2000-char tail window")
     println(line)
     spark.stop()
+  }
+
+  /** The largest (max − min) / median over each query's samples after the
+    * first `skip`; a query with a failed sample or fewer than two samples
+    * left is not counted, and 0 when none is. */
+  private[graft] def worstSpread(runs: Seq[(String, Seq[Double])], skip: Int): Double = {
+    val spreads = runs.collect { case (_, all) if all.forall(_ >= 0) && all.size - skip > 1 =>
+      val s = all.drop(skip)
+      (s.max - s.min) / math.max(s.sorted.apply(s.size / 2), 1e-9)
+    }
+    spreads.maxOption.getOrElse(0.0)
   }
 }

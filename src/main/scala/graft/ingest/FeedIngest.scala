@@ -1,8 +1,7 @@
 package graft.ingest
 
-import graft.model.{FeedSpec, Schemas}
+import graft.model.FeedSpec
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -193,52 +192,3 @@ object FeedIngest {
   }
 }
 
-/**
- * Parquet-backed job ledger — the reference's `JobId` table
- * (ua2sql.py:39–44) plus its latest-per-key lookup (ua2sql.py:165–176).
- */
-object Ledger {
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Schemas.jobLedger).parquet(path)
-
-  /**
-   * find_previous_job_id (ua2sql.py:165–176): newest jobId for one
-   * jobType. Catalyst plans the single-key form as TakeOrderedAndProject —
-   * no full sort, no full shuffle.
-   */
-  def latestJobId(ledger: DataFrame, jobType: String): Option[String] =
-    ledger.filter(col("jobType") === jobType)
-      .orderBy(col("ts").desc)
-      .limit(1)
-      .collect()
-      .headOption
-      .map(_.getAs[String]("jobId"))
-
-  /**
-   * All feeds at once — the generalized "latest record per key" operator
-   * (one shuffle, no per-key driver loop; scales to any key count).
-   */
-  def latestPerType(ledger: DataFrame): DataFrame = {
-    val w = Window.partitionBy("jobType").orderBy(col("ts").desc, col("jobId").desc)
-    ledger.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-  }
-
-  /** Ledger append after a successful load (ua2sql.py:278). Serialized:
-    * concurrent appends to one parquet path race on the shared
-    * output-committer temp dir (found by driving Pipeline.runAll); the
-    * ledger is tiny control metadata, so a JVM-wide lock costs nothing.
-    * On a real cluster this commit belongs in a transactional table
-    * format or metastore. */
-  def append(spark: SparkSession, path: String, jobId: String, jobType: String): Unit =
-    appendLock.synchronized {
-      import spark.implicits._
-      Seq((new java.sql.Timestamp(System.currentTimeMillis()), jobId, jobType))
-        .toDF("ts", "jobId", "jobType")
-        .write.mode(SaveMode.Append).parquet(path)
-    }
-
-  private object appendLock
-}

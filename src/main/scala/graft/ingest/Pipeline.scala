@@ -17,7 +17,11 @@ import org.apache.spark.sql.SparkSession
  *    dedup upstream), so re-running a run that crashed between the write
  *    and the ledger append replaces its own output — the reference's
  *    crash-between-load-and-ledger duplicate window (ua2sql.py:274–278)
- *    is closed, not merely narrowed;
+ *    is closed, not merely narrowed, for the warehouse. The ledger append
+ *    is a no-op for a (jobId, jobType) the ledger already holds, so a
+ *    rerun is recorded once; the DB sink still appends its rows again;
+ *  - the continuation lookup and the ledger append are driver-side reads
+ *    and writes of the ledger's `_log` ([[Ledger]]), with no Spark job;
  *  - request/poll/download of the export job (ua2sql.py:95–161) is
  *    driver-side control I/O handled by [[graft.sources.UnityExportClient]];
  *    this function starts where bytes are staged locally.
@@ -29,10 +33,11 @@ object Pipeline {
   /**
    * Ledger continuation for a feed: the jobId to pass as `continueFrom`
    * (ua2sql.py:252–259); None → caller requests the initial 30-day window.
+   * A driver-side read of the ledger's `_log` ([[Ledger.latest]]): no Spark
+   * job, and `ledgerPath` may be a local path or any Hadoop URI.
    */
   def continuation(spark: SparkSession, ledgerPath: String, feed: FeedSpec): Option[String] =
-    if (!new java.io.File(ledgerPath).exists()) None
-    else Ledger.latestJobId(Ledger.read(spark, ledgerPath), feed.name)
+    Ledger.latest(spark, ledgerPath, feed.name)
 
   /** One feed: staged NDJSON → normalize → dedup → partitioned warehouse →
     * optional DB load (create-first) → optional raw-dump backup → ledger

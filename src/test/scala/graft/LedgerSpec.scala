@@ -1,10 +1,14 @@
 package graft
 
-import graft.ingest.Ledger
+import graft.ingest.{Ledger, Pipeline}
+import graft.model.Schemas
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the job-ledger semantics: latest-per-key lookup (ua2sql.py:165–176)
-  * and append (ua2sql.py:278). */
+/** Pins the job-ledger semantics: latest-per-key lookup (ua2sql.py:165–176),
+  * append (ua2sql.py:278), and the `_log` layout behind them. */
 class LedgerSpec extends AnyFunSuite with SparkSuite {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -37,5 +41,130 @@ class LedgerSpec extends AnyFunSuite with SparkSuite {
     val re = Ledger.read(spark, dir)
     assert(re.count() === 4)
     assert(Ledger.latestJobId(re, "transaction") === Some("jobT9"))
+  }
+
+  private def tmpLedger(): String =
+    java.nio.file.Files.createTempDirectory("graft-ledger").toString + "/ledger"
+
+  private def logFiles(path: String): Seq[String] =
+    Option(new java.io.File(path, "_log").list()).map(_.toSeq.sorted).getOrElse(Nil)
+
+  /** `body`'s result and the Spark jobs it launched. A listener counts job
+    * starts in this thread's job group; a sentinel job in a second group,
+    * waited for, flushes the asynchronous listener bus before the count is
+    * read. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"ledger-${java.util.UUID.randomUUID()}"
+    val starts = new ConcurrentHashMap[String, AtomicInteger]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => starts.computeIfAbsent(g, _ => new AtomicInteger).incrementAndGet())
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "ledger")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!starts.containsKey(group + "-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(starts.containsKey(group + "-end"), "the listener never saw the sentinel job")
+      (out, Option(starts.get(group)).fold(0)(_.get))
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("latest, latestJobId and latestPerType break a ts tie by the larger jobId") {
+    import spark.implicits._
+    val dir = tmpLedger()
+    val t = ts("2024-05-01 00:00:00")
+    Seq((t, "jobA", "appStart"), (t, "jobB", "appStart"), (ts("2024-04-30 00:00:00"), "jobC", "appStart"))
+      .toDF("ts", "jobId", "jobType").write.option("maxRecordsPerFile", 1L).parquet(dir)
+    assert(Ledger.latest(spark, dir, "appStart") === Some("jobB"))
+    for (df <- Seq(Ledger.read(spark, dir), Seq((t, "jobA", "appStart"), (t, "jobB", "appStart"))
+        .toDF("ts", "jobId", "jobType"))) {
+      assert(Ledger.latestJobId(df, "appStart") === Some("jobB"))
+      assert(Ledger.latestPerType(df).collect().map(_.getAs[String]("jobId")).toSeq === Seq("jobB"))
+    }
+  }
+
+  test("a one-file-per-append parquet ledger folds into the log once, row for row") {
+    import spark.implicits._
+    val dir = tmpLedger()
+    // perfbench's seeded layout: one row per file, microsecond timestamps
+    val rows = (0 until 12).map { i =>
+      (ts(f"2024-02-${i + 1}%02d 10:00:00.${123456 + i}%06d"), s"job$i",
+        Schemas.feeds(i % Schemas.feeds.size).name)
+    }
+    rows.toDF("ts", "jobId", "jobType").write.option("maxRecordsPerFile", 1L).parquet(dir)
+
+    val (first, foldJobs) = jobsIn(Ledger.read(spark, dir))
+    assert(foldJobs >= 1)
+    assert(logFiles(dir).filterNot(_.startsWith(".")) === Seq("0.compact"))
+    val got = first.collect().map(r => (r.getTimestamp(0), r.getString(1), r.getString(2)))
+    assert(got.sortBy(_._2).toSeq === rows.sortBy(_._2))
+    assert(got.forall(_._1.getNanos % 1000000 != 0)) // the micros survived
+
+    val folded = new java.io.File(dir, "_log/0.compact").lastModified()
+    val (second, againJobs) = jobsIn(Ledger.read(spark, dir))
+    assert(againJobs === 0)
+    assert(new java.io.File(dir, "_log/0.compact").lastModified() === folded)
+    assert(second.count() === 12)
+  }
+
+  test("continuation on a one-year ledger reads a bounded log and runs no Spark job") {
+    val dir = tmpLedger()
+    val feeds = Schemas.feeds
+    // After every append the log holds one compact file and at most 9
+    // deltas; the local file system adds a hidden `.crc` sidecar per file
+    // and nothing else (no leaked temp file).
+    for (day <- 0 until 365; f <- feeds) {
+      Ledger.append(spark, dir, s"d$day-${f.name}", f.name)
+      val (hidden, entries) = logFiles(dir).partition(_.startsWith("."))
+      assert(entries.size <= 10 && entries.count(_.endsWith(".compact")) === 1, entries)
+      assert(hidden.toSet.subsetOf(entries.map(e => s".$e.crc").toSet), hidden)
+    }
+    val feed = feeds.head
+    val (last, jobs) = jobsIn(Pipeline.continuation(spark, dir, feed))
+    assert(last === Some(s"d364-${feed.name}"))
+    assert(jobs === 0)
+    val best = (1 to 5).map { _ =>
+      val t0 = System.nanoTime()
+      Pipeline.continuation(spark, dir, feed)
+      (System.nanoTime() - t0) / 1e9
+    }.min
+    assert(best < 0.1, s"best of 5 continuation calls took $best s")
+    assert(Ledger.read(spark, dir).count() === 1095)
+  }
+
+  test("concurrent appends across compactions lose and duplicate no entry") {
+    val dir = tmpLedger()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val done = (0 until 4).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 25).foreach(i => Ledger.append(spark, dir, s"t$t-$i", s"feed$t"))
+        })
+      }
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    val ids = Ledger.read(spark, dir).collect().map(_.getAs[String]("jobId")).toSeq
+    assert(ids.size === 100)
+    assert(ids.toSet === (for (t <- 0 until 4; i <- 0 until 25) yield s"t$t-$i").toSet)
+    assert(logFiles(dir).filterNot(_.startsWith(".")).count(_.endsWith(".compact")) === 1)
+    for (t <- 0 until 4) assert(Ledger.latest(spark, dir, s"feed$t") === Some(s"t$t-24"))
+  }
+
+  test("spark.read.parquet of the ledger path never sees _log") {
+    val dir = tmpLedger()
+    ledger.write.option("maxRecordsPerFile", 1L).parquet(dir)
+    Ledger.append(spark, dir, "jobT1", "transaction")
+    Ledger.append(spark, dir, "jobT2", "transaction")
+    assert(logFiles(dir).nonEmpty)
+    val raw = spark.read.parquet(dir)
+    assert(raw.inputFiles.nonEmpty && !raw.inputFiles.exists(_.contains("_log")))
+    assert(raw.count() === 3)
+    assert(Ledger.read(spark, dir).count() === 5)
   }
 }

@@ -46,6 +46,31 @@ class MainSpec extends AnyFunSuite with SparkSuite {
     assert(spark.read.parquet(s"$root/wh").count() === 7)
   }
 
+  test("re-running main with the same --job-id adds no ledger rows") {
+    spark
+    val root = tmp("graft-main-rerun")
+    val staging = s"$root/staging"
+    for (feed <- Seq("appStart", "custom", "transaction")) {
+      val dir = java.nio.file.Paths.get(s"$staging/$feed")
+      java.nio.file.Files.createDirectories(dir)
+      val src = java.nio.file.Paths.get(s"src/test/resources/feeds/$feed/job1")
+      java.nio.file.Files.list(src).forEach { f =>
+        java.nio.file.Files.copy(f, dir.resolve(f.getFileName.toString))
+      }
+    }
+    val cfg = s"$root/config.json"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(cfg),
+      s"""{"projectId": "p1", "apiKey": "k1",
+         |"warehouseRoot": "$root/wh", "stagingPath": "$staging",
+         |"ledgerPath": "$root/ledger"}""".stripMargin)
+    def ledgerRows = graft.ingest.Ledger.read(spark, s"$root/ledger").count()
+
+    Main.main(Array(cfg, "--job-id", "rerun-1"))
+    assert(ledgerRows === 3)
+    Main.main(Array(cfg, "--job-id", "rerun-1"))
+    assert(ledgerRows === 3)
+  }
+
   test("a verbatim reference config drives the full CLI path: DB load + backup") {
     spark
     val root = tmp("graft-main-ref")

@@ -37,6 +37,17 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(pruned.count() === 5)
   }
 
+  test("a file: URI ledger path resumes like a plain path") {
+    val ledger = new java.io.File(tmp("graft-led-uri"), "ledger").toURI.toString
+    assert(ledger.startsWith("file:"))
+    val feed = Schemas.feed("appStart")
+    assert(Pipeline.continuation(spark, ledger, feed) === None)
+    Pipeline.runFeed(spark,
+      Pipeline.FeedRun(feed, "src/test/resources/feeds/appStart/job1", "job-uri-1"),
+      tmp("graft-wh-uri"), ledger)
+    assert(Pipeline.continuation(spark, ledger, feed) === Some("job-uri-1"))
+  }
+
   test("runAll loads all three reference feeds concurrently") {
     val wh = tmp("graft-wh3")
     val ledger = tmp("graft-led3") + "/ledger"
