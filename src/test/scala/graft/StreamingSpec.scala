@@ -4,7 +4,7 @@ import graft.model.Schemas
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming ingest + windowed analytics (SURVEY.md §2.J). */
@@ -720,25 +720,172 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(fixtureBytes(spark, "ab:c", "t") === 0L)
   }
 
-  test("pollDrain: a throwing poll stops the stream and drops its checkpoint") {
+  /** Records each started stream's run id, progress events (total, and
+    * those that read input rows) and termination; [[counts]] waits for
+    * every started stream to report its termination, so all of its
+    * progress events have been delivered. */
+  private class BatchCounter extends StreamingQueryListener {
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+    val started = new ConcurrentLinkedQueue[(String, java.util.UUID)]()
+    private val progress = new ConcurrentHashMap[java.util.UUID, (Int, Int)]()
+    private val ended = ConcurrentHashMap.newKeySet[java.util.UUID]()
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      started.add((e.name, e.runId)): Unit
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      progress.merge(e.progress.runId,
+        (1, if (e.progress.numInputRows > 0) 1 else 0),
+        (a: (Int, Int), b: (Int, Int)) => (a._1 + b._1, a._2 + b._2)): Unit
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      ended.add(e.runId): Unit
+    /** (progress events, data batches) per stream started since the last
+      * call. */
+    def counts(): Seq[(Int, Int)] = {
+      import scala.jdk.CollectionConverters._
+      val ids = started.asScala.map(_._2).toSeq
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!ids.forall(ended.contains) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(ids.forall(ended.contains), "a started stream never reported termination")
+      started.clear()
+      ids.map(id => Option(progress.get(id)).getOrElse((0, 0)))
+    }
+  }
+
+  private def withListener[A](l: StreamingQueryListener)(body: => A): A = {
+    spark.streams.addListener(l)
+    try body finally spark.streams.removeListener(l)
+  }
+
+  test("settle drops its memory-sink view: two q265 calls agree and leave no graft_stream_q_* table") {
+    val q265 = graft.ops.StreamingQueries.queries("q265_streaming_session_rollup")
+    val a = q265(spark, sf0001).collect().toSeq
+    val b = q265(spark, sf0001).collect().toSeq
+    assert(a.nonEmpty)
+    assert(a === b)
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_q_"))
+    assert(left.isEmpty, s"memory-sink views left in the catalog: ${left.mkString(", ")}")
+  }
+
+  /** The keys a failing [[graft.ops.StreamingQueries.drain]] must restore. */
+  private val scopedKeys = Seq("spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.providerClass")
+  private val rocksDB = Map(scopedKeys(1) ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Runs `failing` (one drain, given its writer's query name) under each
+    * prior state of [[scopedKeys]] — explicitly set, then unset — with
+    * scratch checkpoints under a fresh root, and checks the drain's
+    * failure contract: the face's own exception (returned per run) within
+    * 120 s, no stream of that name active, the checkpoint root empty, and
+    * every scoped key back at its prior value. */
+  private def drainFailures(name: String)(failing: String => Unit): Seq[Throwable] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val explicit = spark.conf.getAll
+    val root = java.nio.file.Files.createTempDirectory("graft_drain_ck_").toFile
+    val priors = Seq(
+      Map(scopedKeys(0) -> Some("7"), scopedKeys(1) -> Some(
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")),
+      Map(scopedKeys(0) -> None, scopedKeys(1) -> None))
+    val counter = new BatchCounter
+    spark.conf.set("spark.graft.stream.checkpointDir", root.getAbsolutePath)
+    try withListener(counter) {
+      priors.map { prior =>
+        prior.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None)    => spark.conf.unset(k)
+        }
+        val err = intercept[Throwable](Await.result(Future(failing(name)), 120.seconds))
+        assert(!err.isInstanceOf[java.util.concurrent.TimeoutException], "the drain hung")
+        import scala.jdk.CollectionConverters._
+        assert(counter.started.asScala.exists(_._1 == name), s"$name never started")
+        counter.counts()
+        assert(!spark.streams.active.exists(_.name == name), s"$name is still active")
+        assert(root.list().isEmpty, s"checkpoint left behind: ${root.list().mkString(", ")}")
+        val now = spark.conf.getAll
+        prior.foreach { case (k, v) => assert(now.get(k) === v, k) }
+        err
+      }
+    } finally {
+      spark.conf.unset("spark.graft.stream.checkpointDir")
+      scopedKeys.foreach(k => explicit.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None    => spark.conf.unset(k)
+      })
+      org.apache.commons.io.FileUtils.deleteQuietly(root): Unit
+    }
+  }
+
+  test("drain: a throwing foreachBatch surfaces, stops the stream, drops its checkpoint and restores confs") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[Long]
-    ms.addData(1L, 2L, 3L)
-    var ck: String = null
-    var id: java.util.UUID = null
-    val err = intercept[IllegalStateException] {
-      graft.ops.StreamingQueries.pollDrain(spark) { c =>
-        ck = c
-        val q = ms.toDF().writeStream.format("memory").queryName("poll_drain_fail")
-          .option("checkpointLocation", c).outputMode("append").start()
-        id = q.id
-        q
-      } (() => throw new IllegalStateException("injected poll failure"))
+    val errs = drainFailures("drain_batch_fail") { name =>
+      val ms = MemoryStream[Long]
+      ms.addData(1L, 2L, 3L)
+      graft.ops.StreamingQueries.drain(spark, ms.toDF().writeStream.queryName(name)
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          throw new IllegalStateException("injected batch failure")
+        }, 0L, rocksDB)
     }
-    assert(err.getMessage === "injected poll failure")
-    assert(id != null && !spark.streams.active.exists(_.id == id),
-      "the drained query is still active")
-    assert(ck != null && !new java.io.File(ck).exists(), s"checkpoint $ck left behind")
+    errs.foreach { err =>
+      val chain = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(e => e.isInstanceOf[IllegalStateException] &&
+        e.getMessage == "injected batch failure"), err)
+    }
+  }
+
+  test("drain: a throwing landed poll stops the stream, drops its checkpoint and restores confs") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val errs = drainFailures("poll_drain_fail") { name =>
+      val ms = MemoryStream[Long]
+      ms.addData(1L, 2L, 3L)
+      graft.ops.StreamingQueries.drain(spark, ms.toDF().writeStream.format("memory")
+        .queryName(name).outputMode("append"), 0L, rocksDB,
+        Some(() => throw new IllegalStateException("injected poll failure")))
+    }
+    errs.foreach { err =>
+      assert(err.isInstanceOf[IllegalStateException], err)
+      assert(err.getMessage === "injected poll failure")
+    }
+  }
+
+  test("each streaming face runs its pinned number of micro-batches on sf0.001") {
+    // (progress events, data batches) per face: one progress event per
+    // executed trigger, no-data batches included; a data batch is one
+    // that read input rows. SCALE.md's streaming section carries the
+    // table. q279's TTL bookkeeping (processing-time mode) runs no-data
+    // batches until the landed poll stops the stream, so its total is a
+    // race: 1 or 2 were measured, and only its data batch is pinned.
+    val want = Map(
+      "q257_streaming_tumbling_rollup" -> (1, 1),
+      "q258_streaming_dedup_gate" -> (1, 1),
+      "q265_streaming_session_rollup" -> (1, 1),
+      "q271_streaming_click_attribution" -> (2, 1),
+      "q276_streaming_curation_gate" -> (1, 1),
+      "q277_streaming_anomaly_gate" -> (2, 1),
+      "q278_streaming_trending_topk" -> (1, 1),
+      "q279_streaming_ttl_dedup" -> (1, 1),
+      "q280_streaming_late_data" -> (3, 3),
+      "q281_streaming_update_counts" -> (2, 2),
+      "q282_streaming_funnel" -> (1, 1),
+      "q283_streaming_session_close" -> (2, 1),
+      "q284_streaming_rate_limit" -> (1, 1))
+    assert(want.keySet === graft.ops.StreamingQueries.queries.keySet)
+    val counter = new BatchCounter
+    val got = withListener(counter) {
+      want.keys.toSeq.sorted.map { face =>
+        graft.ops.StreamingQueries.queries(face)(spark, sf0001)
+        val c = counter.counts()
+        assert(c.size === 1, s"$face started ${c.size} streams")
+        face -> c.head
+      }.toMap
+    }
+    val ttl = "q279_streaming_ttl_dedup"
+    assert(got(ttl)._2 === want(ttl)._2)
+    assert(got(ttl)._1 >= want(ttl)._1)
+    assert(got.updated(ttl, want(ttl)) === want, got.toSeq.sorted.mkString(" "))
   }
 }

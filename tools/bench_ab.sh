@@ -15,7 +15,9 @@
 # - merges the two bench_detail.json files into BENCH_AB.json with a
 #   per-query old/new/ratio table (tools/bench_ab_merge.py)
 #
-# Env knobs (same as Bench): SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
+# Env knobs (same as Bench): SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS
+# (default: the box's core count, `nproc` — the count perfbench and the
+# tier-1 run use, so the pair times the plans they run),
 # SPARK_GRAFT_BENCH_ITERS (default 5 here: speed claims rest on
 # 5-iteration pairs), SPARK_GRAFT_BENCH_ONLY.
 set -euo pipefail
@@ -23,7 +25,7 @@ cd "$(git rev-parse --show-toplevel)"
 OLD=${1:?usage: tools/bench_ab.sh OLDREV [NEWREV=HEAD]}
 NEW=${2:-HEAD}
 export SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
-export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
+export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 export SPARK_GRAFT_BENCH_ITERS=${SPARK_GRAFT_BENCH_ITERS:-5}
 WORK=$(mktemp -d /tmp/bench_ab.XXXXXX)
 trap 'git worktree remove --force "$WORK/old" 2>/dev/null || true;
