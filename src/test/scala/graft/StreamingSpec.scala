@@ -836,7 +836,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("drain: a throwing landed poll stops the stream, drops its checkpoint and restores confs") {
+  test("drain: a throwing landed poll stops the stream, drops its checkpoint") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val errs = drainFailures("poll_drain_fail") { name =>
