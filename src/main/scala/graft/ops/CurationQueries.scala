@@ -587,8 +587,8 @@ object CurationQueries {
     // PackSeqLen tokens — each output row says which token span of which
     // document lands in which training sequence. The whole op is ONE
     // distributed prefix sum: a doc's global token offset comes from
-    // GlobalRank's two-pass prefix machinery (range-partition + local
-    // running sum + broadcast per-partition offsets — never a global
+    // GlobalRank's two-pass prefix machinery (range-partition, then a
+    // local running sum from each partition's carry-in — never a global
     // window), and the doc→sequence fan-out explodes only ⌈n/C⌉+1 rows
     // per doc. At 100 TB this is exactly the shape the packing job runs:
     // the corpus streams through map tasks once, and no token ever

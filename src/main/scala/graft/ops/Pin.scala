@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /**
  * Materialize a frame and cut its lineage — the pinning primitive under the
  * iterative/branching operators (dedup shingles, connected-components
- * rounds, GlobalRank's range-tagged frame).
+ * rounds).
  *
  * `localCheckpoint()` stores blocks on executors: cheap, but the blocks die
  * with an executor, and at cluster scale an hours-long dedup loop WILL see

@@ -2212,22 +2212,14 @@ object StatsQueries {
       // interpolation lo + f·(hi−lo) is bit-identical to both engines'
       // percentile/quantile_cont formula; rank ties among equal slope
       // VALUES select the same value whichever tied row wins.
-      // No extra pin on `ranked`: GlobalRank's tagged frame is already
-      // pinned, so each consumer below re-runs only a broadcast join over
-      // checkpointed blocks — the former Pin.lazily wrote a second full
-      // copy of the 2.9M-row rank frame for nothing.
-      val ranked =
-        GlobalRank.withGlobalRank(slopes, Seq($"sl".asc), "rk", "np")
-      val targets = ranked.agg(max($"np").as("npt"))
-        .select($"npt",
-          (floor(lit(0.5) * ($"npt" - 1).cast("double")).cast("long") + 1)
-            .as("t1"),
-          (lit(0.5) * ($"npt" - 1).cast("double") -
-            floor(lit(0.5) * ($"npt" - 1).cast("double"))).as("f"))
-        .withColumn("t2", least($"t1" + 1, $"npt"))
-        .drop("npt")
-      val sl = ranked
-        .join(broadcast(targets), $"rk" === $"t1" || $"rk" === $"t2")
+      // One consumer: every ranked row carries np, so the two target
+      // ranks are per-row arithmetic and the rank runs once.
+      val half = lit(0.5) * ($"np" - 1).cast("double")
+      val sl = GlobalRank.withGlobalRank(slopes, Seq($"sl".asc), "rk", "np")
+        .withColumn("t1", floor(half).cast("long") + 1)
+        .withColumn("f", half - floor(half))
+        .withColumn("t2", least($"t1" + 1, $"np"))
+        .filter($"rk" === $"t1" || $"rk" === $"t2")
         .agg(max($"np").as("n_pairs"), max($"f").as("f"),
           max(when($"rk" === $"t1", $"sl")).as("x1"),
           max(when($"rk" === $"t2", $"sl")).as("x2"))
@@ -4047,12 +4039,14 @@ object StatsQueries {
     // an integer); all correlation moments are DECIMAL(38,0)-exact with
     // the doubling factor cancelling in ρ, so each coefficient is one
     // mirrored float expression over exact integers. No data-row global
-    // window anywhere (the q45/q97 discipline).
+    // window anywhere (the q45/q97 discipline). `rows` feeds three
+    // branches unpinned: they share its exchanges by reuse, and even a
+    // lazy pin would run the join's stages while the query is built.
     "q254_spearman" -> { (s, dir) =>
       import s.implicits._
-      val rows = Pin.lazily(t(s, dir, "orders")
+      val rows = t(s, dir, "orders")
         .join(t(s, dir, "customer"), $"o_custkey" === $"c_custkey")
-        .select(cents($"o_totalprice").as("x"), cents($"c_acctbal").as("y")))
+        .select(cents($"o_totalprice").as("x"), cents($"c_acctbal").as("y"))
       def doubledRanks(vcol: String): DataFrame = {
         val v = rows.groupBy(col(vcol).as("v")).agg(count(lit(1)).as("cnt"))
         GlobalRank.withGlobalPrefixSum(v, Seq(col("v")), col("cnt"),

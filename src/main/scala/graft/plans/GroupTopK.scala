@@ -168,12 +168,13 @@ object GroupTopK {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` registration path
-  * (the per-session runtime fallback is [[GroupTopK.install]], used for
-  * sessions built without it). Installs both the planner strategy and the
-  * window-top-k rewrite rule. */
+  * (the per-session runtime fallbacks are [[GroupTopK.install]] and the
+  * GlobalRank faces' `ensureStrategy`, for sessions built without it).
+  * Installs both planner strategies and the window-top-k rewrite rule. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
+    ext.injectPlannerStrategy(_ => GlobalRankStrategy)
     ext.injectOptimizerRule(_ => GroupTopKRewrite)
   }
 }

@@ -2,9 +2,6 @@ package graft
 
 import graft.ingest.{Ledger, Pipeline}
 import graft.model.Schemas
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the job-ledger semantics: latest-per-key lookup (ua2sql.py:165–176),
@@ -48,32 +45,6 @@ class LedgerSpec extends AnyFunSuite with SparkSuite {
 
   private def logFiles(path: String): Seq[String] =
     Option(new java.io.File(path, "_log").list()).map(_.toSeq.sorted).getOrElse(Nil)
-
-  /** `body`'s result and the Spark jobs it launched. A listener counts job
-    * starts in this thread's job group; a sentinel job in a second group,
-    * waited for, flushes the asynchronous listener bus before the count is
-    * read. */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"ledger-${java.util.UUID.randomUUID()}"
-    val starts = new ConcurrentHashMap[String, AtomicInteger]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => starts.computeIfAbsent(g, _ => new AtomicInteger).incrementAndGet())
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "ledger")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-end", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!starts.containsKey(group + "-end") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(starts.containsKey(group + "-end"), "the listener never saw the sentinel job")
-      (out, Option(starts.get(group)).fold(0)(_.get))
-    } finally sc.removeSparkListener(l)
-  }
 
   test("latest, latestJobId and latestPerType break a ts tie by the larger jobId") {
     import spark.implicits._

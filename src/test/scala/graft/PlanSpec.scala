@@ -70,9 +70,8 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     val p = plan("q197_theil_sen")
     // The day-frame intercept median may use percentile (control-plane
     // sized: one partial + one final = 2 occurrences); the PAIR frame
-    // must not — its median arrives via the pinned GlobalRank frame
-    // (InMemoryTableScan here; the range exchange lives in the cache
-    // build) plus a rank-targeted select.
+    // must not — its median arrives via GlobalRank's range-sorted rank
+    // plus a rank-targeted select.
     val nPct = "percentile\\(".r.findAllMatchIn(p).size
     assert(nPct <= 2, s"pair-frame percentile crept back in ($nPct):\n$p")
     // and the one that remains is the day-frame intercept, never the
@@ -120,9 +119,9 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
 
   test("q254: rank frames stay partitioned; single-partition stages are control-plane only") {
     val p = plan("q254_spearman")
-    // GlobalRank's per-partition prefix windows partition by _gr_pid; the
-    // only SinglePartition exchanges allowed are the pid-granularity
-    // boundary prefix (one per ranked axis) and the final 1-row aggregate.
+    // GlobalRank reads a range exchange and adds no single-partition
+    // stage; the only SinglePartition exchanges allowed are the final
+    // 1-row aggregate's (the bound predates the exec and stays loose).
     val singles = "Exchange SinglePartition".r.findAllIn(p).size
     assert(singles <= 3, s"unexpected single-partition stage count $singles:\n$p")
     assert(!p.contains("CartesianProduct"), p)
@@ -202,8 +201,8 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
 
   test("q273: pooled order statistics ride GlobalRank, not a global window sort") {
     val p = plan("q273_quantile_normalize")
-    // the only SinglePartition exchanges allowed are GlobalRank's
-    // one-row-per-partition control frames + the 1-row n_total broadcast
+    // GlobalRank reads a range exchange; the only SinglePartition
+    // exchanges allowed are control-plane ones (the 1-row n_total)
     val singles = "Exchange SinglePartition".r.findAllIn(p).size
     assert(singles <= 3, s"unexpected single-partition stages ($singles):\n$p")
     assert(!p.contains("CartesianProduct"), p)
@@ -213,8 +212,8 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("q259/q260/q261: packing/curriculum/negatives keep GlobalRank's partitioned shape") {
-    // the only SinglePartition exchange allowed is GlobalRank's
-    // pid-granularity boundary-prefix frame (one per ranked axis)
+    // GlobalRank reads a range exchange; at most two control-plane
+    // SinglePartition exchanges are allowed (the bound predates the exec)
     for (n <- Seq("q259_sequence_packing", "q260_curriculum_interleave",
                   "q261_negative_sampling")) {
       val p = plan(n)

@@ -149,17 +149,6 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
 
   // ------------------------------------ literal-vector kernels (q270, PCA)
 
-  /** Runs `body` with the given session confs, restoring the old values. */
-  private def withConfs[A](kvs: (String, String)*)(body: => A): A = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Whole-stage codegen, then fully interpreted expression evaluation
     * (`nullSafeEval`); the ANSI flag is the caller's. */
   private val kernelModes = Seq(
