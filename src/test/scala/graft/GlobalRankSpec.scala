@@ -63,6 +63,17 @@ class GlobalRankSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanH
     }
   }
 
+  test("under default confs the rank is exact 1..n") {
+    import spark.implicits._
+    val w = Window.orderBy($"v", $"id")
+    val expected = fixture(61)
+      .withColumn("rk_w", row_number().over(w).cast("long"))
+      .select($"id", $"rk_w")
+    val got = GlobalRank.withGlobalRank(fixture(61), Seq($"v", $"id"), "rk", "n")
+    assert(got.join(expected, "id").filter($"rk" =!= $"rk_w").count() === 0)
+    assert(got.agg(max($"n")).head().getLong(0) === 61L)
+  }
+
   test("global rank equals row_number over the unpartitioned window") {
     import spark.implicits._
     forEachLayout(Seq(1, 3, 4, 7)) { layout =>
