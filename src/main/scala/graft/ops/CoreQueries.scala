@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.plans.Shared
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1147,11 +1148,10 @@ object CoreQueries {
     "q104_type_transitions" -> { (s, dir) =>
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ms", $"event_id")
-      // Pinned before branching: fromTotals and the probe side both
-      // consume `pairs`, and exchange reuse is not guaranteed after
-      // optimization — without the pin the event-log window could
-      // execute twice. The pin materializes ≤ types² rows.
-      val pairs = graft.ops.Pin.lazily(events(s, dir)
+      // Shared before branching: fromTotals and the probe side both
+      // consume `pairs`; behind the barrier both plan the same subtree,
+      // so the event-log window's shuffle runs once and is reused.
+      val pairs = Shared(events(s, dir)
         .withColumn("next_type", lead($"event_type", 1).over(w))
         .filter($"next_type".isNotNull)
         .groupBy($"event_type".as("from_type"), $"next_type".as("to_type"))
@@ -1384,7 +1384,7 @@ object CoreQueries {
     // Stickiness is a division of exact counts — bit-identical, unrounded.
     "q128_rolling_active" -> { (s, dir) =>
       import s.implicits._
-      val ud = Pin.lazily(events(s, dir)
+      val ud = Shared(events(s, dir)
         .select($"user_id", to_date($"ts").as("day")).distinct())
       val bounds = ud.agg(min($"day").as("d0"), max($"day").as("d1"))
       val mau = ud
@@ -1490,7 +1490,7 @@ object CoreQueries {
       import s.implicits._
       val ev = events(s, dir).filter($"value".isNotNull)
         .select($"event_type", $"value")
-      val tv = Pin.lazily(ev.groupBy($"event_type", $"value").agg(count(lit(1)).as("c")))
+      val tv = Shared(ev.groupBy($"event_type", $"value").agg(count(lit(1)).as("c")))
       val vals = tv.groupBy($"value").agg(sum($"c").as("cb"))
       val grid = vals
         .crossJoin(broadcast(tv.select($"event_type").distinct()))
@@ -1569,7 +1569,7 @@ object CoreQueries {
       val edges = ev.agg(expr(s"percentile(value, array(${qs.mkString(", ")}))").as("es"))
         .select((0 until 9).map(i =>
           round(element_at($"es", i + 1), 6).as(s"e$i")): _*)
-      val binned = Pin.lazily(ev.crossJoin(broadcast(edges))
+      val binned = Shared(ev.crossJoin(broadcast(edges))
         .withColumn("bin", (0 until 9).map(i =>
           when($"value" >= col(s"e$i"), 1L).otherwise(0L)).reduce(_ + _))
         .groupBy($"event_type", $"bin").agg(count(lit(1)).as("c")))
@@ -1868,12 +1868,12 @@ object CoreQueries {
        |GROUP BY c.event_type, ty.n_t, tot.n
        |ORDER BY event_type""".stripMargin
 
-  /** q15's sessionization as a reusable pinned frame (q144/q154/q157;
+  /** q15's sessionization as a reusable shared frame (q144/q154/q157;
     * also StatsQueries q167's sequence mining). */
   private[ops] def sessionized(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val uw = Window.partitionBy($"user_id").orderBy($"ms", $"event_id")
-    Pin.lazily(events(s, dir)
+    Shared(events(s, dir)
       .withColumn("prev_ms", lag($"ms", 1).over(uw))
       .withColumn("new_sess",
         when($"prev_ms".isNull || $"ms" - $"prev_ms" >= SessionGapMs, 1L).otherwise(0L))
@@ -1907,8 +1907,9 @@ object CoreQueries {
   /** Session-scoped touch×purchase pair frame shared by the attribution
     * models (q144 first/last/linear, q154 time-decay): purchases vs
     * non-purchase touches over [[sessionized]], pairs bounded by session
-    * length via the (user, session) equi-join. Both frames pin so the
-    * two consumers share one materialization. */
+    * length via the (user, session) equi-join. The session frame and
+    * the pair frame are Shared, so both consumers of each reuse its
+    * shuffles. */
   private def touchPurchasePairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
     val sess = sessionized(s, dir)
@@ -1916,7 +1917,7 @@ object CoreQueries {
       .select($"user_id", $"sess_seq", $"ms".as("pms"), $"event_id".as("pid"), $"value")
     val touch = sess.filter($"event_type" =!= "purchase")
       .select($"user_id", $"sess_seq", $"ms".as("tms"), $"event_id".as("tid"), $"event_type")
-    val pairs = Pin.lazily(purch.join(touch, Seq("user_id", "sess_seq"))
+    val pairs = Shared(purch.join(touch, Seq("user_id", "sess_seq"))
       .filter($"tms" < $"pms" || ($"tms" === $"pms" && $"tid" < $"pid")))
     (purch, pairs)
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.plans.GroupTopK
+import graft.plans.{GroupTopK, Shared}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +61,7 @@ object CurationQueries {
     // would log before dropping the document.
     "q53_decontamination" -> { (s, dir) =>
       import s.implicits._
-      // ONE pinned shingle frame feeds both the benchmark set and the
+      // ONE shared shingle frame feeds both the benchmark set and the
       // training side (passing `sh` into benchShingles; a second
       // shingleRows call would re-materialize the whole corpus shingle
       // set and double the query's cost — measured 2× at sf0.1).
@@ -105,27 +105,27 @@ object CurationQueries {
     // standalone query proved (q68/q53/q30/q66); composing them in one
     // frame means Catalyst sees the whole dataflow: one documents scan
     // feeds the quality/dedup/mixture spine, the shingle side reuses the
-    // pinned shingle frame, thresholds and rates ride broadcasts, and the
+    // shared shingle frame, thresholds and rates ride broadcasts, and the
     // only data-sized shuffles are the content-hash window and the
     // per-source aggregates.
     "q76_curation_pipeline" -> { (s, dir) =>
       import s.implicits._
       // Each funnel stage feeds BOTH the next stage and its own per-source
-      // count — without pinning, every one of the 5 count branches would
-      // re-execute the entire upstream spine (scan, scoring, percentile,
-      // anti-join, window): Catalyst reuses identical exchanges, not
-      // arbitrary shared subplans. Lazy pins keep query construction
-      // side-effect free while each stage still materializes exactly once
-      // at execution.
-      val train = Pin.lazily(TextQueries.withQuality(t(s, dir, "documents"))
-        .filter($"doc_id" >= 20))
+      // count. Catalyst reuses identical exchanges, not arbitrary shared
+      // subplans, and left alone it gives each count branch its own pruned
+      // copy of the upstream spine (scan, scoring, percentile, anti-join,
+      // window). Each stage past the scan is Shared, so every branch
+      // plans the same subtree and reuses its shuffles, and building the
+      // query runs nothing.
+      val train = TextQueries.withQuality(t(s, dir, "documents"))
+        .filter($"doc_id" >= 20)
       val thr = train.agg(expr("percentile(quality, 0.25D)").as("q25"))
-      val s1 = Pin.lazily(train.crossJoin(broadcast(thr)).filter($"quality" >= $"q25"))
-      val s2 = Pin.lazily(s1.join(
+      val s1 = Shared(train.crossJoin(broadcast(thr)).filter($"quality" >= $"q25"))
+      val s2 = Shared(s1.join(
         contaminatedDocIds(DedupQueries.shingleRows(s, dir)), Seq("doc_id"), "left_anti"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(md5($"text")).orderBy($"doc_id")
-      val s3 = Pin.lazily(
+      val s3 = Shared(
         s2.withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn"))
       val per = s3.groupBy($"source").agg(sum($"n_tokens").as("n_tokens"))
       val s4 = s3.join(broadcast(mixtureRates(per)), "source")
@@ -538,7 +538,7 @@ object CurationQueries {
     // this query is the scoring pass that feeds it (the selection itself
     // is q65/q66/q79's hash-sampling family).
     //
-    // Scale shape: the gram stream is pinned and aggregated exactly
+    // Scale shape: the gram stream is aggregated exactly
     // twice, BOTH at bounded granularity — (doc, bucket) for the per-doc
     // profile and bucket for the two 256-row distributions; the log-ratio
     // table is 256 rows and BROADCASTS onto the profile. The token
@@ -548,7 +548,7 @@ object CurationQueries {
     // Horner chain in the oracle — identical buckets by construction.
     "q141_dsir_weights" -> { (s, dir) =>
       import s.implicits._
-      val grams = Pin.lazily(t(s, dir, "documents")
+      val grams = t(s, dir, "documents")
         .withColumn("ws", split(lower($"text"), " "))
         .select($"doc_id", $"lang",
           explode(when(size($"ws") >= 2, expr(
@@ -556,7 +556,7 @@ object CurationQueries {
             .otherwise(expr("array()"))).as("gram"))
         .withColumn("bucket",
           (conv(substring(md5($"gram"), 1, 8), 16, 10).cast("long")
-            % DsirBuckets).cast("int")))
+            % DsirBuckets).cast("int"))
       val tgt = grams.filter($"lang" === "en")
         .groupBy($"bucket").agg(count(lit(1)).as("tc"))
       val all = grams.groupBy($"bucket").agg(count(lit(1)).as("rc"))
@@ -661,7 +661,7 @@ object CurationQueries {
     // table and each batch of anchors joins it the same way.
     "q261_negative_sampling" -> { (s, dir) =>
       import s.implicits._
-      val ranked = Pin.lazily(GlobalRank.withGlobalRank(
+      val ranked = Shared(GlobalRank.withGlobalRank(
           t(s, dir, "documents").select($"doc_id"),
           Seq($"doc_id".asc), "rk", "n"))
       val draws = ranked.filter($"doc_id" % 50 === 0)
@@ -736,7 +736,7 @@ object CurationQueries {
     // denominator.
     "q264_epoch_allocation" -> { (s, dir) =>
       import s.implicits._
-      val a = Pin.lazily(t(s, dir, "documents")
+      val a = Shared(t(s, dir, "documents")
         .withColumn("tk", coalesce(size(split($"text", " ")).cast("long"), lit(0L)))
         .groupBy($"source")
         .agg(count(lit(1)).as("n_docs"), sum($"tk").as("toks"))
@@ -812,8 +812,8 @@ object CurationQueries {
     "q267_span_surgery" -> { (s, dir) =>
       import s.implicits._
       val K = 5
-      val d = Pin.lazily(t(s, dir, "documents").filter($"text".isNotNull)
-        .select($"doc_id", split(lower($"text"), " ").as("ws")))
+      val d = t(s, dir, "documents").filter($"text".isNotNull)
+        .select($"doc_id", split(lower($"text"), " ").as("ws"))
       def grams(df: DataFrame) = df.select($"doc_id",
         posexplode(when(size($"ws") >= K, expr(
           s"transform(sequence(0, size(ws) - $K), i -> md5(concat_ws(' ', slice(ws, i + 1, $K))))"))
@@ -957,7 +957,7 @@ object CurationQueries {
     sh.filter(col("doc_id") < 20).select(col("shingle")).distinct()
 
   /** Training docs (doc_id ≥ 20) sharing ≥ 1 shingle with the benchmark.
-    * Takes the ONE pinned shingle frame — both the benchmark set and the
+    * Takes the ONE shared shingle frame — both the benchmark set and the
     * training side branch from it, so the corpus shingles materialize
     * once per query, not once per branch. */
   private def contaminatedDocIds(sh: DataFrame): DataFrame =

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.plans.Shared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,15 +65,14 @@ object DedupQueries {
       }
       .toDF("doc_id", "shingle")
       .distinct()
-      // Materialize once: consumers branch this frame 3-4 ways (pair join
-      // sides, df filter, per-doc counts, signature + verification sets),
-      // and the branches differ after optimization so Catalyst cannot
-      // reuse one exchange across them — without the checkpoint the
-      // scan + shingle flatMap + distinct executes once PER BRANCH
-      // (4× in q31's physical plan). Checkpointed size is the distinct
-      // (doc_id, shingle) set, the same thing the shuffles already carry.
-      // (Pin upgrades to a reliable checkpoint when a dir is configured.)
-      .transform(Pin(_))
+      // Shared: consumers branch this frame 3-4 ways (pair join sides, df
+      // filter, per-doc counts, signature + verification sets). Left to
+      // the optimizer, each branch prunes and filters its own copy, the
+      // copies differ, and the scan + shingle flatMap + distinct executes
+      // once PER BRANCH (4× in q31's physical plan). Behind the barrier
+      // every branch plans the same subtree, so the distinct's shuffle
+      // runs once and the other branches reuse it.
+      .transform(Shared(_))
   }
 
   /** Distinct shingle sets per doc (for exact Jaccard verification). */
@@ -175,10 +175,11 @@ object DedupQueries {
     val hashed = rows.select(col("doc_id"), xxhash64(col("shingle")).as("h"))
     val dfs = hashed.groupBy(col("h")).agg(count(lit(1)).as("df"))
     val byDoc = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    // Pinned: the prefix frame feeds BOTH sides of the self-join, and the
-    // branches differ after optimization, so without the pin the df join
-    // + double window would execute twice (observed in the physical plan).
-    val pref = Pin.lazily(hashed.join(dfs, "h")
+    // Shared: the prefix frame feeds BOTH sides of the self-join, and the
+    // optimizer would give each side its own copy, so without the barrier
+    // the df join + double window would execute twice (observed in the
+    // physical plan).
+    val pref = Shared(hashed.join(dfs, "h")
       .withColumn("rn", row_number().over(byDoc.orderBy(col("df").asc, col("h").asc)))
       .withColumn("n", count(lit(1)).over(byDoc))
       .filter(col("rn") <= col("n") - ceil(lit(JaccardThreshold) * col("n")) + 1)
@@ -271,9 +272,10 @@ object DedupQueries {
     // carry only (32-char digest, doc_id) rows, never document text.
     "q107_winnow_fingerprint_pairs" -> { (s, dir) =>
       import s.implicits._
-      // Pinned: branched three ways (df filter + both join sides); the
-      // branches differ after optimization so Catalyst cannot reuse one
-      // exchange across them (same rationale as shingleRows).
+      // Pinned: branched three ways (df filter + both join sides), and
+      // winnowRows has no shuffle that a Shared barrier could let the
+      // branches reuse, so each branch would fingerprint every document
+      // again (measured 1.8× slower at sf0.1 than this one build job).
       val inv = Pin(winnowRows(s, dir))
       val keep = inv.groupBy($"fp").agg(count(lit(1)).as("df"))
         .filter($"df" >= 2 && $"df" <= 20)
@@ -598,7 +600,7 @@ object DedupQueries {
     // whole-document dedup can't touch because the surrounding text
     // differs. Scale shape: chunking is the same per-row transform as
     // q78 (no shuffle; the exchange carries 16-byte digests); the
-    // (doc, passage) counts pin once and feed BOTH the boilerplate vote
+    // (doc, passage) counts are shared and feed BOTH the boilerplate vote
     // and the per-doc removal sum; the boilerplate set broadcasts (at a
     // corpus where it outgrows the broadcast budget, prefilter with the
     // q73 Bloom pattern — no false negatives, verify join unchanged).
@@ -615,7 +617,7 @@ object DedupQueries {
         explode(expr(
           s"""transform(sequence(0, cast(floor(size(ws) / $PassageLen.0) - 1 as int)),
              |  g -> md5(concat_ws(' ', slice(ws, g * $PassageLen + 1, $PassageLen))))""".stripMargin)).as("h"))
-      val pc = Pin.lazily(
+      val pc = Shared(
         chunks.groupBy($"doc_id", $"h").agg(count(lit(1)).as("c")))
       val boiler = pc.groupBy($"h").agg(count(lit(1)).as("n_docs"))
         .filter($"n_docs" >= 2).select($"h")
@@ -641,7 +643,7 @@ object DedupQueries {
     // no df pruning is needed; the marginal sizes broadcast.
     "q115_source_overlap" -> { (s, dir) =>
       import s.implicits._
-      val ss = Pin.lazily(t(s, dir, "documents")
+      val ss = Shared(t(s, dir, "documents")
         .filter($"text".isNotNull)
         .select($"source", split(lower($"text"), " ").as("toks"))
         .as[(String, Seq[String])]
@@ -671,7 +673,7 @@ object DedupQueries {
     // signal that a crawl has started re-fetching known content and the
     // marginal value of more ingestion is collapsing (the scaling-law
     // dedup argument); per-source aggregation of this number prices each
-    // source's marginal contribution. Scale: rides the ONE pinned
+    // source's marginal contribution. Scale: rides the ONE shared
     // (doc_id, shingle) spine; first-occurrence is a shingle-granularity
     // MIN aggregate, joined back at shingle granularity (16-byte-hashable
     // keys, never text), then collapsed per document — two bounded
@@ -707,12 +709,12 @@ object DedupQueries {
     "q143_dup_span_coverage" -> { (s, dir) =>
       import s.implicits._
       val K = ShingleK
-      val pos = Pin.lazily(t(s, dir, "documents")
+      val pos = t(s, dir, "documents")
         .withColumn("ws", split(lower($"text"), " "))
         .select($"doc_id", size($"ws").cast("long").as("n_tokens"),
           posexplode(when(size($"ws") >= K, expr(
             s"transform(sequence(0, size(ws) - $K), i -> md5(concat_ws(' ', slice(ws, i + 1, $K))))"))
-            .otherwise(expr("array()"))).as(Seq("pos", "h"))))
+            .otherwise(expr("array()"))).as(Seq("pos", "h")))
       val dup = pos.groupBy($"h")
         .agg(countDistinct($"doc_id").as("df")).filter($"df" >= 2)
       val covered = pos.join(dup, "h")
@@ -860,9 +862,9 @@ object DedupQueries {
     * 3-iteration bench build it once (~6 s of the measured ~7 s/iter
     * was this build).
     *
-    * Build: the positioned gram frame (Pin — it feeds both the
-    * occurrence count and the instance join; unpinned, each branch
-    * re-runs the corpus-chars explode). The join/group key is the RAW
+    * Build: the positioned gram frame feeds both the occurrence count and
+    * the instance join, and each explodes the corpus characters (no
+    * exchange to share; the memo builds it once). The join/group key is the RAW
     * 50-char gram, not a digest: substring equality is the operator's
     * semantics and the 50-byte key shuffles barely more than a 32-hex
     * md5 (at corpus scale where shuffled bytes matter, swap in a
@@ -882,11 +884,11 @@ object DedupQueries {
     val L = 50
     val d = t(s, dir, "documents").filter($"text".isNotNull)
       .select($"doc_id", $"text", length($"text").cast("long").as("n_chars"))
-    val grams = Pin.lazily(d.filter($"n_chars" >= L)
+    val grams = d.filter($"n_chars" >= L)
       .select($"doc_id", posexplode(expr(
         s"transform(sequence(1, length(text) - ${L - 1}), i -> substring(text, i, $L))"))
         .as(Seq("idx", "h")))
-      .select($"doc_id", ($"idx" + 1).as("start"), $"h"))
+      .select($"doc_id", ($"idx" + 1).as("start"), $"h")
     val dup = grams.groupBy($"h")
       .agg(count(lit(1)).as("occ")).filter($"occ" >= 2).select($"h")
     val inst = grams.join(dup, "h")
@@ -1106,17 +1108,18 @@ object DedupQueries {
     * bench iterations. */
   private[graft] def tfidfVectors(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, Int) =
-    // Memoized by DataFrame OBJECT, not just spark's cache manager:
-    // Pin.lazily mints a fresh localCheckpoint per call, so rebuilt
-    // plans would NOT canonicalize equal and q245/q256 (and bench
-    // iterations) would each re-materialize `dense` instead of sharing
-    // one InMemoryRelation.
+    // Memoized by DataFrame OBJECT: the build runs two driver collects
+    // (vocabulary, overflow headroom), and q245/q256 (and bench
+    // iterations) share one built (sparse, dense) pair and its cached
+    // blocks instead of re-running them.
     AppCaches.memo(s, dir, "tfidfFrames")(buildTfidfVectors(s, dir))
 
   private def buildTfidfVectors(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, Int) = {
     import s.implicits._
-    val tf = Pin.lazily(t(s, dir, "documents").filter(col("text").isNotNull)
+    // Pinned once per memo build: the build's two collects and the
+    // later builds of `dense` and q245/q256's memoized candidates read it
+    val tf = Pin(t(s, dir, "documents").filter(col("text").isNotNull)
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tk"))
       .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("tf")))
     val nn = tf.agg(countDistinct(col("doc_id")).as("n"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.plans.Shared
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -57,10 +58,9 @@ object SimilarityQueries {
         shiftright($"sig", SrpBits - SrpBandBits * (j + 1))
           .bitwiseAND(lit((1 << SrpBandBits) - 1)).as("bv"))
     }
-    Pin.lazily(
-      e.withColumn("sig", VectorFunctions.srpSig($"emb"))
-        .select($"vec_id", explode(array(bands: _*)).as("bd"))
-        .select($"vec_id", $"bd.band".as("band"), $"bd.bv".as("bv")))
+    e.withColumn("sig", VectorFunctions.srpSig($"emb"))
+      .select($"vec_id", explode(array(bands: _*)).as("bd"))
+      .select($"vec_id", $"bd.band".as("band"), $"bd.bv".as("bv"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -407,7 +407,7 @@ object SimilarityQueries {
         .withColumn("nrm", sqrt(expr("aggregate(emb, 0D, (a, x) -> a + x * x)")))
         .filter($"nrm" > 0.0)
         .select($"vec_id", expr("transform(emb, x -> x / nrm)").as("emb"))
-        .transform(Pin.lazily(_)) // training iterations + encode + re-rank reuse it
+        .transform(Pin(_)) // training iterations + encode + re-rank reuse it
       val model = Pq.fit(e, iters = 3, m = PqM)
       val codes = e.select($"vec_id",
         graft.functions.VectorFunctions.pqEncode(s, $"emb", model.codebooks).as("codes"))

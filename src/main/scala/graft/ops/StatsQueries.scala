@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.plans.Shared
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,7 +34,7 @@ import Tables._
  *    are calendar equi-joins against a broadcast offset spine, not
  *    windows, so nothing ever sorts data rows globally.
  *  - **Sequence mining** (q167 session trigrams): rides CoreQueries'
- *    pinned sessionization; windows are partitioned by (user, session).
+ *    shared sessionization; windows are partitioned by (user, session).
  *  - **Sorted-neighborhood dedup** (q166): the classic entity-resolution
  *    alternative to LSH banding (DedupQueries q31/q32) — sort by a
  *    normalized key, compare only w nearest neighbors per block.
@@ -399,13 +400,17 @@ object StatsQueries {
   val CmhBalThr = "5000.0"
   val CmhOrderFloor = 10L
 
-  // Shared pinned frames are MEMOIZED per (application, fixture dir) —
-  // the covStats/q91-layout lesson: q163/q164/q169/q177/q184 share the
-  // day frame and q158/q165/q170 share the basket + pair frames; a
-  // 3-iteration bench would otherwise re-aggregate the fact table once
-  // per consumer per iteration. The cached object is the lazily-pinned
-  // DataFrame; its checkpoint blocks materialize on first action and
-  // live for the app.
+  // Frames that several queries read are MEMOIZED per (application,
+  // fixture dir) — the covStats/q91-layout lesson: q163/q164/q169/q177/
+  // q184 share the day frame and q158/q165/q170 share the basket + pair
+  // frames; a 3-iteration bench would otherwise re-aggregate the fact
+  // table once per consumer per iteration. The memo holds a pinned
+  // DataFrame, materialized once when the memo is built and alive as long
+  // as the memo entry. A pin, not cache(): a plan that reads a cached
+  // relation twice gets a second instance with fresh attribute ids, Spark
+  // then canonicalizes the two differently, and no exchange above them is
+  // reused — every Shared frame over a cached memo would run once per
+  // consumer.
 
   /**
    * Day-granularity revenue frame: one row per calendar order day with
@@ -418,7 +423,7 @@ object StatsQueries {
   private def dailyRevenueCents(s: SparkSession, dir: String): DataFrame =
     AppCaches.memo(s, dir, "day") {
       import s.implicits._
-      Pin.lazily(t(s, dir, "orders")
+      Pin(t(s, dir, "orders")
         .groupBy(to_date($"o_orderdate").as("d"))
         .agg(sum(cents($"o_totalprice")).as("cents")))
     }
@@ -459,7 +464,7 @@ object StatsQueries {
   private def brandBaskets(s: SparkSession, dir: String): DataFrame =
     AppCaches.memo(s, dir, "baskets") {
       import s.implicits._
-      Pin.lazily(t(s, dir, "lineitem")
+      Pin(t(s, dir, "lineitem")
         .join(broadcast(t(s, dir, "part")), $"l_partkey" === $"p_partkey")
         .select($"l_orderkey".as("ok"), $"p_brand".as("brand"))
         .distinct())
@@ -477,7 +482,7 @@ object StatsQueries {
     AppCaches.memo(s, dir, "brandpairs") {
       import s.implicits._
       val bb = brandBaskets(s, dir)
-      Pin.lazily(bb.as("a")
+      Pin(bb.as("a")
         .join(bb.as("b"), $"a.ok" === $"b.ok" && $"a.brand" < $"b.brand")
         .select($"a.brand".as("brand_a"), $"b.brand".as("brand_b"))
         .groupBy($"brand_a", $"brand_b").agg(count(lit(1)).as("pair_n")))
@@ -520,7 +525,7 @@ object StatsQueries {
   private def logregFeatures(s: SparkSession, dir: String): DataFrame =
     AppCaches.memo(s, dir, "logregfeats") {
       import s.implicits._
-      val raw = Pin.lazily(t(s, dir, "documents")
+      val raw = t(s, dir, "documents")
         .filter($"text".isNotNull)
         .select($"doc_id", ($"lang" === "en").cast("double").as("y"),
           split(lower($"text"), " ").as("ws"), length($"text").as("len"))
@@ -528,7 +533,7 @@ object StatsQueries {
           ($"len".cast("double") / size($"ws")).as("r1"),
           (size(filter($"ws", w => w === "the" || w === "a")).cast("double") /
             size($"ws")).as("r2"),
-          (size(array_distinct($"ws")).cast("double") / size($"ws")).as("r3")))
+          (size(array_distinct($"ws")).cast("double") / size($"ws")).as("r3"))
       // Standardization moments ride e12 fixed-point sums (ORACLE.md
       // rule 4): float avg/stddev_pop were partition-order-dependent,
       // and the q181 oracle replays these exact chains. m appears three
@@ -548,7 +553,7 @@ object StatsQueries {
           sum(floor($"r3" * $"r3" * lit(1e12)).cast(dec)).as("qq3"))
         .select(m(1).as("m1"), sd(1).as("s1"), m(2).as("m2"), sd(2).as("s2"),
           m(3).as("m3"), sd(3).as("s3"))
-      Pin.lazily(raw.crossJoin(broadcast(mo))
+      Pin(raw.crossJoin(broadcast(mo))
         .select($"doc_id", $"y", lit(1.0).as("x0"),
           (($"r1" - $"m1") / $"s1").as("x1"),
           (($"r2" - $"m2") / $"s2").as("x2"),
@@ -688,13 +693,13 @@ object StatsQueries {
     // -------------------------------------------------- chi-square contingency
     // Independence audit of order priority × status: one fact scan, one
     // (5×3)-cell aggregate; marginals and the grand total re-aggregate
-    // the PINNED 15-row cell frame (zero extra fact scans). Expected
+    // the SHARED 15-row cell frame (zero extra fact scans). Expected
     // counts and per-cell contributions are single float expressions of
     // exact BIGINTs — per-cell output avoids any cross-engine float-sum
     // ordering entirely (the spec sums contributions for the statistic).
     "q160_chi_square_cells" -> { (s, dir) =>
       import s.implicits._
-      val cells = Pin.lazily(t(s, dir, "orders")
+      val cells = Shared(t(s, dir, "orders")
         .groupBy($"o_orderpriority", $"o_orderstatus")
         .agg(count(lit(1)).as("obs")))
       val rt = cells.groupBy($"o_orderpriority").agg(sum($"obs").as("rt"))
@@ -716,10 +721,10 @@ object StatsQueries {
     // log10(1+1/d) — the classic fabricated-data screen. The digit comes
     // from the cents BIGINT's decimal string (no log10-of-value edge
     // cases at exact powers of ten); digit-granularity (9 rows) from one
-    // scan, total derived from the pinned digit frame.
+    // scan, total derived from the shared digit frame.
     "q161_benford_digits" -> { (s, dir) =>
       import s.implicits._
-      val d = Pin.lazily(t(s, dir, "orders")
+      val d = Shared(t(s, dir, "orders")
         .select(substring(cents($"o_totalprice").cast("string"), 1, 1)
           .cast("int").as("digit"))
         .groupBy($"digit").agg(count(lit(1)).as("n_d")))
@@ -736,14 +741,14 @@ object StatsQueries {
     // -------------------------------------------------------- MAD outliers
     // Robust per-segment outlier counts: median + median-absolute-
     // deviation (the robust σ), flagging |x−med| > 3·1.4826·MAD. Three
-    // group-granularity passes over the pinned 2-column projection
+    // group-granularity passes over the 2-column projection
     // (medians are holistic — Spark's exact interpolated percentile ≡
     // DuckDB quantile_cont, the q26 convention); the 5-row stats frame
     // broadcasts back for the count pass.
     "q162_mad_outliers" -> { (s, dir) =>
       import s.implicits._
-      val c = Pin.lazily(t(s, dir, "customer")
-        .select($"c_mktsegment", $"c_acctbal"))
+      val c = t(s, dir, "customer")
+        .select($"c_mktsegment", $"c_acctbal")
       val med = c.groupBy($"c_mktsegment")
         .agg(expr("percentile(c_acctbal, 0.5D)").as("med"))
       val stats = c.join(broadcast(med), "c_mktsegment")
@@ -823,9 +828,9 @@ object StatsQueries {
     // PageRank (damping 0.85, 3 power iterations from uniform) over the
     // brand co-occurrence graph — "central" brands that co-sell with
     // everything. The corpus-scale work is the basket/edge aggregation
-    // (shared, pinned); each iteration is then an edge-granularity join
+    // (memoized, pinned); each iteration is then an edge-granularity join
     // (≤625 rows here; E rows in general) between the broadcast rank
-    // vector and the pinned edge list — the standard distributed
+    // vector and the shared edge list — the standard distributed
     // power-iteration shape, with per-iteration cost O(E), not O(n²).
     // The oracle unrolls the same three iterations as CTEs.
     "q165_brand_pagerank" -> { (s, dir) =>
@@ -976,7 +981,7 @@ object StatsQueries {
     // Σ_v deg(v)² on wedges, never |V|³. (On skewed degree graphs orient
     // by (degree, id) instead of id so hubs sit on the cheap side; the
     // brand graph is near-regular, so lexicographic keeps oracle parity
-    // trivially.) Brand granularity end-to-end after the shared pinned
+    // trivially.) Brand granularity end-to-end after the memoized pinned
     // basket frame.
     "q170_brand_triangles" -> { (s, dir) =>
       import s.implicits._
@@ -1003,12 +1008,11 @@ object StatsQueries {
     // engine float-sum ordering never applies.
     "q171_llr_collocations" -> { (s, dir) =>
       import s.implicits._
-      val wprev = Pin.lazily(
-        t(s, dir, "documents")
-          .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
-          .withColumn("prev",
-            lag($"tok", 1).over(Window.partitionBy($"doc_id").orderBy($"pos"))))
-      val bi = Pin.lazily(wprev.filter($"prev".isNotNull)
+      val wprev = t(s, dir, "documents")
+        .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
+        .withColumn("prev",
+          lag($"tok", 1).over(Window.partitionBy($"doc_id").orderBy($"pos")))
+      val bi = Shared(wprev.filter($"prev".isNotNull)
         .groupBy($"prev", $"tok").agg(count(lit(1)).as("k11")))
       val rf = bi.groupBy($"prev").agg(sum($"k11").as("r_c"))
       val cf = bi.groupBy($"tok").agg(sum($"k11").as("c_c"))
@@ -1068,7 +1072,7 @@ object StatsQueries {
     // rollup computes the same table with inclusion–exclusion.
     "q173_audience_overlap" -> { (s, dir) =>
       import s.implicits._
-      val tu = Pin.lazily(events(s, dir)
+      val tu = Shared(events(s, dir)
         .select($"event_type".as("et"), $"user_id").distinct())
       val cnt = tu.groupBy($"et").agg(count(lit(1)).as("n_et"))
       tu.as("a").join(tu.as("b"),
@@ -1203,7 +1207,7 @@ object StatsQueries {
     // Cumulatives ride a band-spine theta join, not a window.
     "q240_t_closeness" -> { (s, dir) =>
       import s.implicits._
-      val rows = Pin.lazily(t(s, dir, "customer")
+      val rows = Shared(t(s, dir, "customer")
         .groupBy($"c_nationkey", $"c_mktsegment",
           floor($"c_acctbal" / 1000.0).cast("long").as("band"))
         .agg(count(lit(1)).as("cnt")))
@@ -1257,7 +1261,7 @@ object StatsQueries {
       import s.implicits._
       val y = t(s, dir, "orders").groupBy($"o_custkey")
         .agg(sum(cents($"o_totalprice")).as("yy"))
-      val cust = Pin.lazily(t(s, dir, "customer")
+      val cust = Shared(t(s, dir, "customer")
         .select($"c_custkey", cents($"c_acctbal").as("sc"),
           (substring(md5($"c_custkey".cast("string")), 1, 1) <= "7")
             .as("treated"))
@@ -1313,7 +1317,7 @@ object StatsQueries {
       val day = dailyRevenueCents(s, dir)
       val spine = day.agg(min($"d").as("d0"), max($"d").as("d1"))
         .select(explode(sequence($"d0", $"d1")).as("d"))
-      val dense = Pin.lazily(spine.join(day, Seq("d"), "left"))
+      val dense = Shared(spine.join(day, Seq("d"), "left"))
       val known = dense.filter($"cents".isNotNull)
       val missing = dense.filter($"cents".isNull).select($"d")
       val prevN = missing
@@ -1354,7 +1358,7 @@ object StatsQueries {
       val day = dailyRevenueCents(s, dir)
       val bounds = day.agg(min($"d").as("d0"), max($"d").as("d1"),
         sum($"cents").as("sc"), count(lit(1)).as("nd"))
-      val flagged = Pin.lazily(bounds
+      val flagged = Shared(bounds
         .select($"d0", ($"sc".cast("double") / $"nd".cast("double")).as("thr"),
           explode(sequence($"d0", $"d1")).as("d"))
         .join(day, Seq("d"), "left")
@@ -1451,12 +1455,12 @@ object StatsQueries {
     // (nation, market segment, balance coarsened to 1000-unit bands) —
     // rows in groups smaller than 5 are re-identifiable; coarsened
     // numerics still leak, which is exactly what this audit surfaces.
-    // One group-granularity aggregate, pinned so the table-wide k (the
+    // One group-granularity aggregate, shared so the table-wide k (the
     // min group size) derives from the same frame; output is the
     // violating groups with the table k alongside.
     "q176_k_anonymity" -> { (s, dir) =>
       import s.implicits._
-      val g = Pin.lazily(t(s, dir, "customer")
+      val g = Shared(t(s, dir, "customer")
         .groupBy($"c_nationkey", $"c_mktsegment",
           floor($"c_acctbal" / 1000.0).cast("long").as("bal_band"))
         .agg(count(lit(1)).as("group_size")))
@@ -1489,10 +1493,10 @@ object StatsQueries {
             md5(concat(lit("vn:"), $"shard", lit(":"), $"vi".cast("string"))),
             1, 12), 16, 10).cast("long")))
       }
-      val keys = Pin.lazily(t(s, dir, "customer")
+      val keys = t(s, dir, "customer")
         .select($"c_custkey".as("k"),
           conv(substring(md5(concat(lit("k:"), $"c_custkey".cast("string"))),
-            1, 12), 16, 10).cast("long").as("kpos")))
+            1, 12), 16, 10).cast("long").as("kpos"))
       def assign(r: DataFrame, col: String): DataFrame = {
         val m = keys.crossJoin(r)
           .groupBy($"k")
@@ -1504,7 +1508,7 @@ object StatsQueries {
       }
       val before = assign(ring(None), "shard_before")
       val after = assign(ring(Some("s3")), "shard_after")
-      val j = Pin.lazily(before.join(after, "k")
+      val j = Shared(before.join(after, "k")
         .withColumn("moved", ($"shard_before" =!= $"shard_after").cast("long")))
       val tot = j.agg(count(lit(1)).as("n_keys"), sum($"moved").as("n_moved"))
       j.groupBy($"shard_after".as("shard"))
@@ -1558,7 +1562,7 @@ object StatsQueries {
     // ----------------------------------------------- day-of-week index
     // Weekly seasonality: average revenue per weekday over the overall
     // daily average (index 1.0 = a flat week) — the calendar complement
-    // to q163's autocorrelation. All moments exact off the shared pinned
+    // to q163's autocorrelation. All moments exact off the memoized pinned
     // day frame; the index is one mirrored float division of exact
     // integer products. Weekday is Monday=0 in both engines (Spark
     // weekday(), DuckDB isodow−1 — dayofweek() anchors differ).
@@ -1748,7 +1752,7 @@ object StatsQueries {
     // data-wide work is the one bucket aggregate.
     "q182_jackknife_ci" -> { (s, dir) =>
       import s.implicits._
-      val b = Pin.lazily(t(s, dir, "orders")
+      val b = Shared(t(s, dir, "orders")
         .groupBy((conv(substring(md5($"o_custkey".cast("string")), 1, 8), 16, 10)
           .cast("long") % 32).cast("int").as("bucket"))
         .agg(count(lit(1)).as("n_g"), sum(cents($"o_totalprice")).as("s_g")))
@@ -1779,8 +1783,8 @@ object StatsQueries {
     // division per strategy row.
     "q183_padding_waste" -> { (s, dir) =>
       import s.implicits._
-      val toks = Pin.lazily(t(s, dir, "documents").filter($"text".isNotNull)
-        .select($"doc_id", size(split(lower($"text"), " ")).cast("long").as("n_tok")))
+      val toks = t(s, dir, "documents").filter($"text".isNotNull)
+        .select($"doc_id", size(split(lower($"text"), " ")).cast("long").as("n_tok"))
       def strategy(name: String, order: Seq[Column]): DataFrame =
         GlobalRank.withGlobalRank(toks, order, "rk", "n")
           .withColumn("batch", expr("(rk - 1) div 32"))
@@ -1842,11 +1846,11 @@ object StatsQueries {
         .agg(count(lit(1)).as("ca"))
       val cb = t(s, dir, "lineitem").groupBy($"l_orderkey".as("k"))
         .agg(count(lit(1)).as("cb"))
-      val joined = Pin.lazily(ca.join(cb, "k")
+      val joined = ca.join(cb, "k")
         .withColumn("prod", ($"ca".cast(dec) * $"cb"))
         .withColumn("samp",
           (conv(substring(md5($"k".cast("string")), 1, 8), 16, 10)
-            .cast("long") % 16) === 0))
+            .cast("long") % 16) === 0)
       joined.agg(
           sum($"prod").as("exact_rows"),
           sum(when($"samp", $"prod").otherwise(lit(0L).cast(dec)))
@@ -2106,7 +2110,7 @@ object StatsQueries {
       val ev = events(s, dir)
       val span = ev.agg(min($"ms").as("mn"), max($"ms").as("mx"))
         .select(expr("(mn + mx) div 2").as("cut"))
-      val byType = Pin.lazily(ev.crossJoin(broadcast(span))
+      val byType = Shared(ev.crossJoin(broadcast(span))
         .groupBy($"event_type")
         .agg(sum(when($"ms" < $"cut", 1L).otherwise(0L)).as("c1"),
           sum(when($"ms" >= $"cut", 1L).otherwise(0L)).as("c2")))
@@ -2119,7 +2123,7 @@ object StatsQueries {
             sqrt(pp * (lit(1.0) - pp) *
               (lit(1.0) / $"n1".cast("double") + lit(1.0) / $"n2".cast("double"))))
         .withColumn("pval", erfcPval($"z"))
-      val ranked = Pin.lazily(GlobalRank.withGlobalRank(scored,
+      val ranked = Shared(GlobalRank.withGlobalRank(scored,
         Seq($"pval".asc, $"event_type".asc), "rk", "m"))
       val kstar = ranked.agg(
         max(when($"pval" <=
@@ -2312,9 +2316,9 @@ object StatsQueries {
       import s.implicits._
       val sc0 = TextQueries.qualityScored(s, dir)
         .select($"doc_id", $"source", $"quality")
-      val g = Pin.lazily(GlobalRank.withGlobalRank(sc0,
+      val g = Shared(GlobalRank.withGlobalRank(sc0,
         Seq($"source".asc, $"quality".asc, $"doc_id".asc), "grk", "n_all"))
-      val pooled = Pin.lazily(GlobalRank.withGlobalRank(sc0,
+      val pooled = Shared(GlobalRank.withGlobalRank(sc0,
         Seq($"quality".asc, $"doc_id".asc), "prk", "n_tot")
         .select($"prk", $"quality".as("pq")))
       val ss = g.groupBy($"source")
@@ -2401,7 +2405,7 @@ object StatsQueries {
       import s.implicits._
       val ev = events(s, dir)
       val base = ev.agg(min(to_date($"ts")).as("d0"))
-      val first = Pin.lazily(ev.groupBy($"user_id")
+      val first = Shared(ev.groupBy($"user_id")
         .agg(min(to_date($"ts")).as("fd")))
       val rev = ev.filter($"event_type" === "purchase" && $"value".isNotNull)
         .select($"user_id", to_date($"ts").as("day"), $"value")
@@ -2598,7 +2602,7 @@ object StatsQueries {
     // mirrored float expression. Min support 5 customers.
     "q212_sequential_rules" -> { (s, dir) =>
       import s.implicits._
-      val firsts = Pin.lazily(t(s, dir, "lineitem")
+      val firsts = Shared(t(s, dir, "lineitem")
         .join(broadcast(t(s, dir, "part")), $"l_partkey" === $"p_partkey")
         .join(t(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
         .groupBy($"o_custkey".as("cust"), $"p_brand".as("brand"))
@@ -2845,7 +2849,7 @@ object StatsQueries {
         .withColumn("h",
           conv(substring(md5(concat(lit("kmv:"), $"o_custkey".cast("string"))),
             1, 12), 16, 10).cast("long"))
-      val sk = Pin.lazily(graft.plans.GroupTopK(mu,
+      val sk = Shared(graft.plans.GroupTopK(mu,
           Seq($"m"), Seq($"h".asc, $"o_custkey".asc), KmvK)
         .select($"m", $"h"))
       val st = sk.groupBy($"m").agg(count(lit(1)).as("kn"), max($"h").as("hk"))
@@ -2930,8 +2934,8 @@ object StatsQueries {
     // ROUND semantics diverge (the q164 lesson).
     "q178_repair_audit" -> { (s, dir) =>
       import s.implicits._
-      val c = Pin.lazily(t(s, dir, "customer")
-        .select($"c_mktsegment", $"c_acctbal"))
+      val c = t(s, dir, "customer")
+        .select($"c_mktsegment", $"c_acctbal")
       val th = c.filter($"c_acctbal" >= 0)
         .groupBy($"c_mktsegment")
         .agg(expr("percentile(c_acctbal, 0.5D)").as("med"),
@@ -2967,7 +2971,7 @@ object StatsQueries {
       val en = iv.groupBy($"ems".as("ms")).agg(count(lit(1)).as("n_end"))
       val pts = st.join(en, Seq("ms"), "full_outer")
         .na.fill(0L, Seq("n_start", "n_end"))
-      val act = Pin.lazily(GlobalRank.withGlobalPrefixSum(
+      val act = Shared(GlobalRank.withGlobalPrefixSum(
           pts, Seq($"ms"), $"n_start" - $"n_end", "rk", "nn", "cum_d", "tot")
         .select($"ms", to_date(timestamp_millis($"ms")).as("d"),
           ($"cum_d" + $"n_end").as("active")))
@@ -2993,20 +2997,20 @@ object StatsQueries {
     "q220_brand_bfs" -> { (s, dir) =>
       import s.implicits._
       val pc = brandPairCounts(s, dir).filter($"pair_n" >= 10)
-      val edges = Pin.lazily(pc.select($"brand_a".as("src"), $"brand_b".as("dst"))
+      val edges = Pin(pc.select($"brand_a".as("src"), $"brand_b".as("dst"))
         .union(pc.select($"brand_b".as("src"), $"brand_a".as("dst"))))
-      var dist = Pin.lazily(Seq(("Brand#1", 0L)).toDF("brand", "dist"))
+      var dist = Pin(Seq(("Brand#1", 0L)).toDF("brand", "dist"))
       var frontier = dist.select($"brand")
       var depth = 0L
       var done = false
       while (!done && depth < 6) {
-        val next = Pin.lazily(frontier.join(edges, $"brand" === $"src")
+        val next = Pin(frontier.join(edges, $"brand" === $"src")
           .select($"dst".as("brand")).distinct()
           .join(dist.select($"brand".as("vb")), $"brand" === $"vb", "left_anti")
           .withColumn("dist", lit(depth + 1L)))
         if (next.isEmpty) done = true
         else {
-          dist = Pin.lazily(dist.union(next))
+          dist = Pin(dist.union(next))
           frontier = next.select($"brand")
           depth += 1
         }
@@ -3083,10 +3087,10 @@ object StatsQueries {
     // DECIMAL→double (c_x·c_y overflows LONG at ~3·10⁹ rows per
     // marginal); ONE mirrored float expression per cell with the −0.0
     // guard (independent cells contribute exactly 0). One fact scan;
-    // marginals re-aggregate the pinned ≤35-cell frame.
+    // marginals re-aggregate the shared ≤35-cell frame.
     "q222_mutual_information" -> { (s, dir) =>
       import s.implicits._
-      val cells = Pin.lazily(events(s, dir)
+      val cells = Shared(events(s, dir)
         .groupBy($"event_type", weekday(to_date($"ts")).as("dow"))
         .agg(count(lit(1)).as("obs")))
       val mx = cells.groupBy($"event_type").agg(sum($"obs").as("n_x"))
@@ -3118,7 +3122,7 @@ object StatsQueries {
     // frame), proving the sweep equals the dominance definition.
     "q223_pareto_frontier" -> { (s, dir) =>
       import s.implicits._
-      val pp = Pin.lazily(t(s, dir, "part")
+      val pp = Shared(t(s, dir, "part")
         .groupBy(cents($"p_retailprice").as("price_c"),
           $"p_size".cast("long").as("p_size"))
         .agg(count(lit(1)).as("n_parts")))
@@ -3148,7 +3152,7 @@ object StatsQueries {
       import s.implicits._
       val spend = t(s, dir, "orders")
         .groupBy($"o_custkey").agg(sum(cents($"o_totalprice")).as("v"))
-      val strata = Pin.lazily(t(s, dir, "customer")
+      val strata = Shared(t(s, dir, "customer")
         .join(spend, $"c_custkey" === $"o_custkey", "left_outer")
         .select($"c_mktsegment", coalesce($"v", lit(0L)).as("v"))
         .groupBy($"c_mktsegment")
@@ -3186,9 +3190,9 @@ object StatsQueries {
     "q225_bm25" -> { (s, dir) =>
       import s.implicits._
       val terms = Seq("spark", "join", "window")
-      val docs = Pin.lazily(t(s, dir, "documents")
+      val docs = t(s, dir, "documents")
         .select($"doc_id", split(lower($"text"), " ").as("ws"))
-        .select($"doc_id", size($"ws").cast("long").as("dl"), $"ws"))
+        .select($"doc_id", size($"ws").cast("long").as("dl"), $"ws")
       val tok = docs.select($"doc_id", explode($"ws").as("token"))
         .filter($"token".isin(terms: _*))
       val stats = tok.groupBy($"token").agg(countDistinct($"doc_id").as("df"))
@@ -3239,7 +3243,7 @@ object StatsQueries {
     "q226_jw_blocking" -> { (s, dir) =>
       import s.implicits._
       graft.functions.StringSimilarity.register(s)
-      val names = Pin.lazily(t(s, dir, "part")
+      val names = Shared(t(s, dir, "part")
         .groupBy($"p_name").agg(count(lit(1)).as("n_parts"))
         .withColumn("blk", split($"p_name", " ").getItem(0)))
       val a = names.select($"blk", $"p_name".as("name_a"), $"n_parts".as("parts_a"))
@@ -3330,8 +3334,8 @@ object StatsQueries {
     // a 3-row advisory. Exact integers + one mirrored float each.
     "q229_partition_layout_advisor" -> { (s, dir) =>
       import s.implicits._
-      val ev = Pin.lazily(events(s, dir)
-        .select($"event_type", to_date($"ts").as("d"), $"user_id"))
+      val ev = events(s, dir)
+        .select($"event_type", to_date($"ts").as("d"), $"user_id")
       def profile(name: String, key: Column): DataFrame =
         ev.groupBy(key.as("k")).agg(count(lit(1)).as("cnt"))
           .agg(count(lit(1)).as("n_parts"), sum($"cnt").as("n_rows"),
@@ -3359,7 +3363,7 @@ object StatsQueries {
     // doubles are engine-order-free.
     "q230_isotonic_calibration" -> { (s, dir) =>
       import s.implicits._
-      val b = Pin.lazily(t(s, dir, "lineitem")
+      val b = Shared(t(s, dir, "lineitem")
         .select(expr("(cast(l_quantity as bigint) - 1) div 5").as("bin"),
           when($"l_returnflag" === "R", 1L).otherwise(0L).as("y"))
         .groupBy($"bin").agg(sum($"y").as("pos"), count(lit(1)).as("n")))
@@ -3406,7 +3410,7 @@ object StatsQueries {
       // above m(1−m) — no valid beta prior exists there) degenerates to
       // NULL exactly like v = 0, instead of anti-shrinking rates out of
       // [0,1] (review finding).
-      val br = Pin.lazily(t(s, dir, "lineitem")
+      val br = Shared(t(s, dir, "lineitem")
         .join(broadcast(t(s, dir, "part")), $"l_partkey" === $"p_partkey")
         .groupBy($"p_brand")
         .agg(sum(when($"l_returnflag" === "R", 1L).otherwise(0L)).as("x"),
@@ -3506,7 +3510,7 @@ object StatsQueries {
       val trn = o.filter($"o_orderkey" % 3 === 0)
       val cal = o.filter($"o_orderkey" % 3 === 1)
       val tst = o.filter($"o_orderkey" % 3 === 2)
-      val preds = Pin.lazily(trn.groupBy($"prio")
+      val preds = Shared(trn.groupBy($"prio")
         .agg(sum($"c").as("sc"), count(lit(1)).as("nc"))
         .select($"prio",
           ($"sc".cast("double") / $"nc".cast("double")).as("yhat")))
@@ -3554,12 +3558,12 @@ object StatsQueries {
     // are exact; pct is the one mirrored division.
     "q234_tombstone_cascade" -> { (s, dir) =>
       import s.implicits._
-      val tomb = Pin.lazily(t(s, dir, "customer")
+      val tomb = t(s, dir, "customer")
         .filter(substring(md5($"c_custkey".cast("string")), 1, 1) === "0")
-        .select($"c_custkey".as("k")))
-      val tombOrders = Pin.lazily(t(s, dir, "orders")
+        .select($"c_custkey".as("k"))
+      val tombOrders = t(s, dir, "orders")
         .join(broadcast(tomb), $"o_custkey" === $"k")
-        .select($"o_orderkey".as("tok")))
+        .select($"o_orderkey".as("tok"))
       def audit(name: String, df: DataFrame, key: Column,
           tombKeys: DataFrame, tk: Column): DataFrame =
         df.join(broadcast(tombKeys), key === tk, "left")
@@ -3594,7 +3598,7 @@ object StatsQueries {
     // empty-prediction corner pinned to 0 identically in both engines.
     "q235_pr_curve" -> { (s, dir) =>
       import s.implicits._
-      val b = Pin.lazily(t(s, dir, "documents")
+      val b = Shared(t(s, dir, "documents")
         .filter($"text".isNotNull)
         .select(split(lower($"text"), " ").as("ws"),
           ($"lang" === "en").cast("long").as("y"))
@@ -3633,7 +3637,7 @@ object StatsQueries {
       import s.implicits._
       val w = Window.partitionBy($"o_custkey")
         .orderBy($"o_orderdate".desc, $"o_orderkey".desc)
-      val ranked = Pin.lazily(t(s, dir, "orders")
+      val ranked = Shared(t(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey",
           row_number().over(w).as("rn")))
       val brandOf = broadcast(t(s, dir, "part")
@@ -3684,10 +3688,11 @@ object StatsQueries {
     "q247_adamic_adar" -> { (s, dir) =>
       import s.implicits._
       val nb = brandBaskets(s, dir).agg(countDistinct($"ok").as("n_baskets"))
-      // Pinned: e feeds five downstream references (both×2, wedges×2,
-      // the anti-join); unpinned, each replays the threshold crossJoin +
-      // basket-count aggregate (8 copies in the physical plan).
-      val e = Pin.lazily(brandPairCounts(s, dir).crossJoin(broadcast(nb))
+      // Shared: e feeds five downstream references (both×2, wedges×2,
+      // the anti-join); without the barrier each replays the threshold
+      // crossJoin + basket-count aggregate (8 copies in the physical
+      // plan).
+      val e = Shared(brandPairCounts(s, dir).crossJoin(broadcast(nb))
         .filter($"pair_n".cast("double") >=
           lit(AaSupportFrac.toDouble) * $"n_baskets".cast("double"))
         .select($"brand_a", $"brand_b"))
@@ -3728,7 +3733,7 @@ object StatsQueries {
           posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
       val cnt = toks.groupBy($"tok").agg(count(lit(1)).as("c"))
       val tot = cnt.agg(sum($"c").as("total"))
-      val kept = Pin.lazily(toks.join(cnt, "tok").crossJoin(broadcast(tot))
+      val kept = Shared(toks.join(cnt, "tok").crossJoin(broadcast(tot))
         .withColumn("keep", least(lit(1.0),
           sqrt(lit(SkipgramT.toDouble) * $"total".cast("double") /
             $"c".cast("double"))))
@@ -3913,10 +3918,10 @@ object StatsQueries {
     "q252_fs_linkage" -> { (s, dir) =>
       import s.implicits._
       graft.functions.StringSimilarity.register(s)
-      val parts = Pin.lazily(t(s, dir, "part")
+      val parts = t(s, dir, "part")
         .select($"p_partkey", $"p_name", $"p_brand", $"p_type", $"p_size",
           concat_ws(" ", split_part($"p_name", lit(" "), lit(1)),
-            split_part($"p_name", lit(" "), lit(2))).as("blk")))
+            split_part($"p_name", lit(" "), lit(2))).as("blk"))
       def agree(a: String, b: String): Seq[Column] = Seq(
         (graft.functions.StringSimilarity.jaroWinkler(
           col(s"$a.p_name"), col(s"$b.p_name")) >= lit(FsJwThr.toDouble))
@@ -4040,8 +4045,8 @@ object StatsQueries {
     // the doubling factor cancelling in ρ, so each coefficient is one
     // mirrored float expression over exact integers. No data-row global
     // window anywhere (the q45/q97 discipline). `rows` feeds three
-    // branches unpinned: they share its exchanges by reuse, and even a
-    // lazy pin would run the join's stages while the query is built.
+    // branches unpinned: they share its exchanges by reuse with no
+    // barrier, since no branch prunes or filters it differently.
     "q254_spearman" -> { (s, dir) =>
       import s.implicits._
       val rows = t(s, dir, "orders")

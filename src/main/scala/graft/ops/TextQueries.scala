@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.plans.Shared
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -456,9 +457,9 @@ object TextQueries {
     // once against the enriched bigram table — `c_prev` is attached to
     // the bigram table AT BIGRAM GRANULARITY (bi ⋈ uni on prev, a
     // corpus-scale×broadcast join), not by a third token-stream-wide
-    // join. The (doc_id,pos,tok,prev) frame is pinned so the document
-    // scan + lag window execute once and feed uni, bi, and the scoring
-    // stream from the materialized blocks. At 100 TB the bigram table is
+    // join. The (doc_id,pos,tok,prev) frame is Shared so the document
+    // scan + lag window shuffle once and feed uni, bi, and the scoring
+    // stream by exchange reuse. At 100 TB the bigram table is
     // the thing you prune (keep count ≥ floor, let interpolation absorb
     // the tail) — the join shape stays the same. λ = 0.75/0.25 are
     // exactly representable doubles and both engines evaluate the
@@ -467,7 +468,7 @@ object TextQueries {
     // shared round(…, 6), exactly as in q81.
     "q88_bigram_logprob" -> { (s, dir) =>
       import s.implicits._
-      val wprev = Pin.lazily(
+      val wprev = Shared(
         t(s, dir, "documents")
           .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
           .withColumn("prev",
@@ -513,12 +514,12 @@ object TextQueries {
     // decimal path of ops/Tables before dividing.
     "q95_source_lift" -> { (s, dir) =>
       import s.implicits._
-      // Pinned before branching: perTok/perSrc/total/scored all derive
-      // from `st`, and exchange reuse is not guaranteed — without the
-      // pin the corpus-wide token explode + count could execute four
-      // times. The pin materializes the (source, token) table, which is
-      // sources × vocabulary bounded.
-      val st = Pin.lazily(t(s, dir, "documents")
+      // Shared before branching: perTok/perSrc/total/scored all derive
+      // from `st`; without the barrier each branch prunes its own copy
+      // and the corpus-wide token explode + count could execute four
+      // times. The shared shuffle carries the (source, token) table,
+      // which is sources × vocabulary bounded.
+      val st = Shared(t(s, dir, "documents")
         .select($"source", explode(split(lower($"text"), " ")).as("token"))
         .groupBy($"source", $"token").agg(count(lit(1)).as("n_st")))
       val perTok = st.groupBy($"token").agg(sum($"n_st").as("n_t"))
@@ -549,13 +550,13 @@ object TextQueries {
     // (merge = elementwise add, any merge tree), and the row-hash family
     // is the SQL-expressible md5 recipe of q33/q41 — Spark's conv(md5)
     // face here, DuckDB's hex-digit Horner in the oracle, and the JVM
-    // updater all compute the identical buckets. The one pinned `toks`
+    // updater all compute the identical buckets. The one `toks`
     // frame feeds both the exact probe counts and the sketch.
     "q110_countmin_freq" -> { (s, dir) =>
       import s.implicits._
       graft.functions.CountMin.register(s)
-      val toks = Pin.lazily(t(s, dir, "documents")
-        .select(explode(split(lower($"text"), " ")).as("tok")))
+      val toks = t(s, dir, "documents")
+        .select(explode(split(lower($"text"), " ")).as("tok"))
       val probe = toks.groupBy($"tok").agg(count(lit(1)).as("exact_n"))
         .orderBy($"exact_n".desc, $"tok").limit(10)
       val cells = toks
@@ -593,9 +594,9 @@ object TextQueries {
     // ln's ≤1-ulp wobble remains, absorbed by round(…, 6).
     "q111_pmi_bigrams" -> { (s, dir) =>
       import s.implicits._
-      // Pinned before branching: uni / totals / bi all derive from the
-      // same token+prev frame (q88's pin rationale).
-      val wprev = Pin.lazily(
+      // Shared before branching: uni / totals / bi all derive from the
+      // same token+prev frame (q88's rationale).
+      val wprev = Shared(
         t(s, dir, "documents")
           .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
           .withColumn("prev",
@@ -657,7 +658,7 @@ object TextQueries {
     // + one final round(6) absorb partial-agg order noise (~1e-13 ≪ grain).
     "q120_source_kl" -> { (s, dir) =>
       import s.implicits._
-      val st = Pin.lazily(t(s, dir, "documents")
+      val st = Shared(t(s, dir, "documents")
         .select($"source", explode(split(lower($"text"), " ")).as("tok"))
         .groupBy($"source", $"tok").agg(count(lit(1)).as("c_st")))
       val srcTot = st.groupBy($"source")
@@ -730,8 +731,8 @@ object TextQueries {
     // break on doc_id identically.
     "q124_bm25_topk" -> { (s, dir) =>
       import s.implicits._
-      val toks = Pin.lazily(t(s, dir, "documents")
-        .select($"doc_id", explode(split(lower($"text"), " ")).as("tok")))
+      val toks = t(s, dir, "documents")
+        .select($"doc_id", explode(split(lower($"text"), " ")).as("tok"))
       val dl = toks.groupBy($"doc_id").agg(count(lit(1)).as("dl"))
       val post = toks.groupBy($"tok", $"doc_id").agg(count(lit(1)).as("tf"))
       val dfr = post.groupBy($"tok").agg(count(lit(1)).as("df"))
@@ -789,13 +790,13 @@ object TextQueries {
     // RRF sum is two mirrored divisions.
     "q189_rrf_hybrid" -> { (s, dir) =>
       import s.implicits._
-      val toks = Pin.lazily(t(s, dir, "documents")
-        .select($"doc_id", explode(split(lower($"text"), " ")).as("tok")))
-      val dl = Pin.lazily(toks.groupBy($"doc_id").agg(count(lit(1)).as("dl")))
-      val post = Pin.lazily(
+      val toks = t(s, dir, "documents")
+        .select($"doc_id", explode(split(lower($"text"), " ")).as("tok"))
+      val dl = Shared(toks.groupBy($"doc_id").agg(count(lit(1)).as("dl")))
+      val post = Shared(
         toks.groupBy($"tok", $"doc_id").agg(count(lit(1)).as("tf")))
       val dfr = post.groupBy($"tok").agg(count(lit(1)).as("df"))
-      val cf = Pin.lazily(post.groupBy($"tok").agg(sum($"tf").as("cf")))
+      val cf = Shared(post.groupBy($"tok").agg(sum($"tf").as("cf")))
       val stats = dl.agg(count(lit(1)).as("n_docs"), sum($"dl").as("sum_dl"))
       val vt = cf.agg(count(lit(1)).as("vocab"), sum($"cf").as("total"))
       val qterms = Bm25Queries
@@ -886,7 +887,7 @@ object TextQueries {
       import s.implicits._
       val dl = t(s, dir, "documents")
         .select($"doc_id", size(split(lower($"text"), " ")).cast("long").as("dl"))
-      val ranked = Pin.lazily(GlobalRank.withGlobalPrefixSum(dl,
+      val ranked = Shared(GlobalRank.withGlobalPrefixSum(dl,
         Seq($"dl".asc, $"doc_id".asc), $"dl", "rk", "n", "cum", "total"))
       val stats = ranked.agg(max($"n").as("n"), max($"total").as("t"),
         sum($"cum".cast("decimal(38,0)")).as("b"))
@@ -980,7 +981,7 @@ object TextQueries {
       import s.implicits._
       val merges = bpeTrainedMerges(s, dir).map(m => (m._2, m._3))
       val bm = s.sparkContext.broadcast(merges)
-      val docWords = Pin.lazily(t(s, dir, "documents").filter($"text".isNotNull)
+      val docWords = Shared(t(s, dir, "documents").filter($"text".isNotNull)
         .select($"doc_id", explode(split(lower($"text"), " ")).as("w"))
         .filter(length($"w") > 0)
         .groupBy($"doc_id", $"w").agg(count(lit(1)).as("c")))
@@ -1016,7 +1017,7 @@ object TextQueries {
     // count table, so c(prev,w) ≥ 1 and the discounted term is ≥ 0.25 —
     // no max(·,0) clamp, no unseen-bigram branch, every probability > 0.
     //
-    // Scale shape, same discipline as q88: the pinned bigram-count table
+    // Scale shape, same discipline as q88: the shared bigram-count table
     // is the ONE corpus-scale aggregate and meets the token stream in a
     // shuffle join on (prev, tok); everything else attached to the stream
     // is VOCABULARY-bounded — the context stats (c_prev = Σ_w c(prev,w),
@@ -1031,14 +1032,14 @@ object TextQueries {
     // the position-ordered fold + shared round(…, 6), as in q81/q88.
     "q263_kneser_ney" -> { (s, dir) =>
       import s.implicits._
-      val wprev = Pin.lazily(
+      val wprev = Shared(
         t(s, dir, "documents")
           .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
           .withColumn("prev",
             lag($"tok", 1).over(Window.partitionBy($"doc_id").orderBy($"pos"))))
-      // One corpus-scale aggregate, pinned: context stats, continuation
+      // One corpus-scale aggregate, shared: context stats, continuation
       // counts, and the type total are all rollups of it.
-      val bi = Pin.lazily(wprev.filter($"prev".isNotNull)
+      val bi = Shared(wprev.filter($"prev".isNotNull)
         .groupBy($"prev", $"tok").agg(count(lit(1)).as("c_bi")))
       val ctx = bi.groupBy($"prev")
         .agg(sum($"c_bi").as("c_prev"), count(lit(1)).as("n_follow"))
@@ -1136,10 +1137,10 @@ object TextQueries {
         .select($"doc_id", $"pos", $"b")
       val ranked = GlobalRank.withGlobalRank(bg,
         Seq($"doc_id".asc, $"pos".asc), "rk", "n")
-      val first = Pin.lazily(ranked.groupBy($"b").agg(min($"rk").as("frk"))
-        .crossJoin(broadcast(ranked.agg(max($"n").as("nn")))))
+      // every ranked row carries the total n, so the group max is it
+      val first = ranked.groupBy($"b").agg(min($"rk").as("frk"), max($"n").as("nn"))
       val cps = s.range(1, 11).select($"id".as("k"))
-      val grid = Pin.lazily(first
+      val grid = Shared(first
         .join(broadcast(cps), $"frk" <= expr("(nn * k) div 10"))
         .groupBy($"k", expr("(nn * k) div 10").as("n_prefix"))
         .agg(count(lit(1)).as("v_prefix")))
@@ -1188,8 +1189,8 @@ object TextQueries {
     // attach is an integer equi-join.
     "q273_quantile_normalize" -> { (s, dir) =>
       import s.implicits._
-      val q = Pin.lazily(qualityScored(s, dir)
-        .select($"doc_id", $"source", $"quality"))
+      val q = qualityScored(s, dir)
+        .select($"doc_id", $"source", $"quality")
       val wsrc = Window.partitionBy($"source")
         .orderBy($"quality".asc, $"doc_id".asc)
       val ranked = q
@@ -1230,8 +1231,8 @@ object TextQueries {
     // movement is the per-doc gram hash-aggregates; no corpus² anywhere.
     "q272_gopher_repetition" -> { (s, dir) =>
       import s.implicits._
-      val base = Pin.lazily(t(s, dir, "documents").filter($"text".isNotNull)
-        .select($"doc_id", split(lower($"text"), " ").as("ws")))
+      val base = t(s, dir, "documents").filter($"text".isNotNull)
+        .select($"doc_id", split(lower($"text"), " ").as("ws"))
       val den = base.select($"doc_id",
         expr("aggregate(ws, 0L, (a, w) -> a + length(w))").as("wchars"))
       def gramRows(n: Int) = base

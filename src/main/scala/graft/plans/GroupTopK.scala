@@ -169,12 +169,14 @@ object GroupTopK {
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` registration path
   * (the per-session runtime fallbacks are [[GroupTopK.install]] and the
-  * GlobalRank faces' `ensureStrategy`, for sessions built without it).
-  * Installs both planner strategies and the window-top-k rewrite rule. */
+  * GlobalRank and Shared faces' `ensureStrategy`, for sessions built
+  * without it). Installs the three planner strategies and the window-top-k
+  * rewrite rule. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
     ext.injectPlannerStrategy(_ => GlobalRankStrategy)
+    ext.injectPlannerStrategy(_ => SharedStrategy)
     ext.injectOptimizerRule(_ => GroupTopKRewrite)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, GraftPlanApi, Row}
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, AQEShuffleReadExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
@@ -259,10 +258,10 @@ class GlobalRankSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanH
   // ---- build-time jobs and plan guards ----------------------------------
 
   /** Rank-family queries whose build ran GlobalRank's eager pins and no
-    * other Spark job. The rest of the family still builds with jobs of
-    * its own: eager pins (q197, q223, q233), a driver collect (q186), or
-    * a lazy pin over the rank, which executes its input's stages (q126,
-    * q195, q200, q219, q261, q269). */
+    * other Spark job. Of the rest of the family, q126, q195, q200, q219,
+    * q223, q233, q261 and q269 built with lazy pins over or under the
+    * rank and are checked in SharedSpec; q197 (a pin feeding a range
+    * repartition) and q186 (a driver collect) still build with jobs. */
   private val lazyRankQueries = Seq(
     "q45_acctbal_deciles", "q56_acctbal_dist", "q58b_exact_percentiles",
     "q97_quality_calibration", "q101_rfm_segments", "q119_vocab_coverage",
@@ -290,21 +289,28 @@ class GlobalRankSpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPlanH
 
   /** Unpartitioned WindowExec nodes: each moves its whole input into one
     * task. */
-  private def dataSizedGlobalWindows(plan: SparkPlan): Seq[WindowExec] =
-    plan.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+  private def dataSizedGlobalWindows(df: DataFrame): Seq[WindowExec] =
+    planNodes(df).collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+
+  test("the window guard sees through AQE: a planted unpartitioned window is found") {
+    import spark.implicits._
+    val planted = spark.range(0, 50).withColumn("rn", row_number().over(Window.orderBy($"id")))
+    val root = planted.queryExecution.executedPlan
+    // the adaptive root is a leaf to SparkPlan.collect, which finds no window
+    assert(root.collect { case w: WindowExec => w }.isEmpty, root.toString)
+    assert(dataSizedGlobalWindows(planted).size === 1, root.toString)
+  }
 
   test("q45/q56: no single-partition window over data rows") {
     for (q <- Seq("q45_acctbal_deciles", "q56_acctbal_dist")) {
-      val p = SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan
-      val bad = dataSizedGlobalWindows(p)
+      val bad = dataSizedGlobalWindows(SparkEntry.queries(q)(spark, sf0001))
       assert(bad.isEmpty, s"$q has a data-sized global window:\n${bad.mkString("\n")}")
     }
   }
 
   test("no registered query has an unpartitioned window over data rows") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { q =>
-      val p = SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan
-      if (dataSizedGlobalWindows(p).nonEmpty) Some(q) else None
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { q =>
+      dataSizedGlobalWindows(SparkEntry.queries(q)(spark, sf0001)).nonEmpty
     }
     assert(offenders.isEmpty, s"unpartitioned data windows in: $offenders")
   }

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pin must stay executor-local by default and upgrade to a RELIABLE
   * checkpoint the moment a checkpoint dir is configured (the cluster
-  * durability switch SCALE.md documents). */
+  * durability switch SCALE.md documents). A query that shares a frame in
+  * its plan writes no checkpoint at all. */
 class PinSpec extends AnyFunSuite with SparkSuite {
 
   test("Pin upgrades to a reliable checkpoint when a checkpoint dir is set") {
@@ -32,5 +33,18 @@ class PinSpec extends AnyFunSuite with SparkSuite {
       sc.setCheckpointDir(null)
     }
     assert(sc.getCheckpointDir.isEmpty)
+  }
+
+  test("a query that shares a frame in its plan writes no checkpoint under a reliable dir") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-shared-ckpt").toString
+    sc.setCheckpointDir(dir)
+    try {
+      assert(SparkEntry.queries("q160_chi_square_cells")(spark, sf0001).count() > 0)
+      def rddDirs(p: java.io.File): Seq[java.io.File] =
+        Option(p.listFiles).map(_.toSeq).getOrElse(Nil).filter(_.isDirectory)
+          .flatMap(d => if (d.getName.startsWith("rdd-")) Seq(d) else rddDirs(d))
+      assert(rddDirs(new java.io.File(dir)).isEmpty)
+    } finally sc.setCheckpointDir(null)
   }
 }

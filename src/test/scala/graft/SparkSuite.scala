@@ -3,7 +3,9 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** One shared local SparkSession for all suites (JVM-wide, lazy). */
 trait SparkSuite {
@@ -46,9 +48,19 @@ trait SparkSuite {
       (out, Option(starts.get(group)).fold(0)(_.get))
     } finally sc.removeSparkListener(l)
   }
+
+  /** Every operator of `df`'s executed plan, seen through AQE. The root of
+    * an adaptive plan is an `AdaptiveSparkPlanExec`, a leaf to
+    * `SparkPlan.collect`; this walks its current plan and each query
+    * stage's plan instead — the initial plan before `df` runs, the final
+    * plan (with its reused stages) after. */
+  def planNodes(df: DataFrame): Seq[SparkPlan] =
+    SparkSuite.adaptive.collect(df.queryExecution.executedPlan) { case p => p }
 }
 
 object SparkSuite {
   // cpus pinned: SPARK_GRAFT_CPUS follows the box, test parallelism must not
   lazy val session: SparkSession = GraftSession.local(cpus = 4)
+
+  private object adaptive extends AdaptiveSparkPlanHelper
 }

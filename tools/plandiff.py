@@ -6,6 +6,8 @@ same tree, so each file is normalized first:
   - `plan_id=N` exchange ids;
   - `$Lambda...` class names and `@<hex>` object identities;
   - UUIDs and the `-<hex>-<n>` suffix of `/tmp/graft-*` scratch dirs;
+  - the source line of an RDD's call site (`at Pin.scala:27`), which moves
+    with any edit above it in that file;
   - expression ids `#n` and RDD ids `RDD[n]`, each renumbered per file in
     order of first appearance. RDD ids count up across the whole run, so
     one query that builds a different number of RDDs from run to run
@@ -26,6 +28,7 @@ SUBS = [
     (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"),
      "UUID"),
     (re.compile(r"(/tmp/graft-[a-z_-]*?)-[0-9a-f]+-\d+"), r"\1-X"),
+    (re.compile(r"(?<= at )(\w+\.scala):\d+"), r"\1:N"),
 ]
 RENUMBER = [re.compile(r"(#)(\d+)"), re.compile(r"(RDD\[)(\d+)")]
 
