@@ -1833,15 +1833,18 @@ object CoreQueries {
   private def ksOverGrid(grid: DataFrame, spineCol: String, ksAlias: String): DataFrame = {
     val s = grid.sparkSession
     import s.implicits._
-    val types = grid.groupBy($"event_type").agg(sum($"c").as("n_t"))
-    val total = types.agg(sum($"n_t").as("n"))
-    val cw = Window.partitionBy($"event_type").orderBy(col(spineCol))
+    // Every type's partition holds the whole spine, and cb is the all-type
+    // count at each spine point, so the type total n_t and the corpus total
+    // n are both sums over the partition the cumulative already uses: two
+    // more window columns, not two branches that re-read the grid.
+    val byType = Window.partitionBy($"event_type")
+    val cw = byType.orderBy(col(spineCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     grid
       .withColumn("cum_t", sum($"c").over(cw))
       .withColumn("cum_all", sum($"cb").over(cw))
-      .join(broadcast(types), "event_type")
-      .crossJoin(broadcast(total))
+      .withColumn("n_t", sum($"c").over(byType))
+      .withColumn("n", sum($"cb").over(byType))
       .groupBy($"event_type", $"n_t", $"n")
       .agg(max(abs($"cum_t" * ($"n" - $"n_t") - ($"cum_all" - $"cum_t") * $"n_t"))
         .as("d_num"))
@@ -1869,7 +1872,9 @@ object CoreQueries {
        |ORDER BY event_type""".stripMargin
 
   /** q15's sessionization as a reusable shared frame (q144/q154/q157;
-    * also StatsQueries q167's sequence mining). */
+    * also StatsQueries q167's sequence mining). It ends in one exchange
+    * by session, the key its consumers group or join on, so the session
+    * windows run once however many branches read the frame. */
   private[ops] def sessionized(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val uw = Window.partitionBy($"user_id").orderBy($"ms", $"event_id")
@@ -1879,7 +1884,8 @@ object CoreQueries {
         when($"prev_ms".isNull || $"ms" - $"prev_ms" >= SessionGapMs, 1L).otherwise(0L))
       .withColumn("sess_seq",
         sum($"new_sess").over(uw.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select($"user_id", $"sess_seq", $"ms", $"event_id", $"event_type", $"value"))
+      .select($"user_id", $"sess_seq", $"ms", $"event_id", $"event_type", $"value")
+      .repartition($"user_id", $"sess_seq"))
   }
 
   /** Shared by q156 (oracle-checked output) and q157 (driver-side solve):

@@ -84,7 +84,10 @@ object CurationQueries {
     // Bit-identical to q53 by construction, so it shares the oracle.
     "q73_decontamination_bloom" -> { (s, dir) =>
       import s.implicits._
-      val sh = DedupQueries.shingleRows(s, dir)
+      // Pinned: the Bloom build is its own Spark job, run while the query
+      // is built, and the returned plan reads the shingle spine again;
+      // exchange reuse does not reach across the two executions.
+      val sh = Pin(DedupQueries.shingleRows(s, dir))
       val benchSh = benchShingles(sh)
       val bloom = graft.functions.BloomFunctions.build(
         benchSh, $"shingle", expectedItems = 100000L, numBits = 1200000L)
@@ -106,45 +109,44 @@ object CurationQueries {
     // frame means Catalyst sees the whole dataflow: one documents scan
     // feeds the quality/dedup/mixture spine, the shingle side reuses the
     // shared shingle frame, thresholds and rates ride broadcasts, and the
-    // only data-sized shuffles are the content-hash window and the
-    // per-source aggregates.
+    // only data-sized shuffles are the scored corpus's, the content-hash
+    // window's and the per-source one.
     "q76_curation_pipeline" -> { (s, dir) =>
       import s.implicits._
-      // Each funnel stage feeds BOTH the next stage and its own per-source
-      // count. Catalyst reuses identical exchanges, not arbitrary shared
-      // subplans, and left alone it gives each count branch its own pruned
-      // copy of the upstream spine (scan, scoring, percentile, anti-join,
-      // window). Each stage past the scan is Shared, so every branch
-      // plans the same subtree and reuses its shuffles, and building the
-      // query runs nothing.
-      val train = TextQueries.withQuality(t(s, dir, "documents"))
+      // Every stage is a per-row FLAG on one frame rather than a filtered
+      // copy of it, so the funnel counts are sums of one aggregate instead
+      // of five count branches over five nested copies of the spine. The
+      // scored corpus sits behind one shared exchange (the per-row text
+      // scoring runs once for the percentile and the flags), and so does
+      // the dedup window's output, which the per-source token totals and
+      // the final counts both read. Building the query runs nothing.
+      val train = Shared(TextQueries.withQuality(t(s, dir, "documents"))
         .filter($"doc_id" >= 20)
+        .repartition($"doc_id"))
       val thr = train.agg(expr("percentile(quality, 0.25D)").as("q25"))
-      val s1 = Shared(train.crossJoin(broadcast(thr)).filter($"quality" >= $"q25"))
-      val s2 = Shared(s1.join(
-        contaminatedDocIds(DedupQueries.shingleRows(s, dir)), Seq("doc_id"), "left_anti"))
+      val contaminated = contaminatedDocIds(DedupQueries.shingleRows(s, dir))
+        .withColumn("contam", lit(true))
+      // dedup ranks only the rows still in the funnel: the decontaminated
+      // flag is part of the window's partition key
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(md5($"text")).orderBy($"doc_id")
-      val s3 = Shared(
-        s2.withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn"))
-      val per = s3.groupBy($"source").agg(sum($"n_tokens").as("n_tokens"))
-      val s4 = s3.join(broadcast(mixtureRates(per)), "source")
-        .filter(keepHash < $"keep_per_mille")
-      def cnt(df: DataFrame, name: String) =
-        df.groupBy($"source").agg(count(lit(1)).as(name))
-      cnt(train, "n_in")
-        .join(cnt(s1, "n_quality"), Seq("source"), "left")
-        .join(cnt(s2, "n_decontam"), Seq("source"), "left")
-        .join(cnt(s3, "n_dedup"), Seq("source"), "left")
-        .join(s4.groupBy($"source")
-          .agg(count(lit(1)).as("n_kept"), sum($"n_tokens").as("tokens_kept")),
-          Seq("source"), "left")
-        .select($"source", $"n_in",
-          coalesce($"n_quality", lit(0L)).as("n_quality"),
-          coalesce($"n_decontam", lit(0L)).as("n_decontam"),
-          coalesce($"n_dedup", lit(0L)).as("n_dedup"),
-          coalesce($"n_kept", lit(0L)).as("n_kept"),
-          coalesce($"tokens_kept", lit(0L)).as("tokens_kept"))
+        .partitionBy(md5($"text"), $"c_ok").orderBy($"doc_id")
+      val flagged = Shared(train.crossJoin(broadcast(thr))
+        .join(broadcast(contaminated), Seq("doc_id"), "left")
+        .withColumn("q_ok", coalesce($"quality" >= $"q25", lit(false)))
+        .withColumn("c_ok", $"q_ok" && $"contam".isNull)
+        .withColumn("d_ok", $"c_ok" && row_number().over(w) === 1)
+        .select($"doc_id", $"source", $"n_tokens", $"q_ok", $"c_ok", $"d_ok")
+        .repartition($"source"))
+      val per = flagged.filter($"d_ok")
+        .groupBy($"source").agg(sum($"n_tokens").as("n_tokens"))
+      def n(flag: Column) = sum(when(flag, 1L).otherwise(0L))
+      flagged.join(broadcast(mixtureRates(per)), Seq("source"), "left")
+        .withColumn("k_ok", $"d_ok" && keepHash < $"keep_per_mille")
+        .groupBy($"source")
+        .agg(count(lit(1)).as("n_in"), n($"q_ok").as("n_quality"),
+          n($"c_ok").as("n_decontam"), n($"d_ok").as("n_dedup"),
+          n($"k_ok").as("n_kept"),
+          sum(when($"k_ok", $"n_tokens").otherwise(0L)).as("tokens_kept"))
         .orderBy($"source")
     },
 
@@ -548,7 +550,10 @@ object CurationQueries {
     // Horner chain in the oracle — identical buckets by construction.
     "q141_dsir_weights" -> { (s, dir) =>
       import s.implicits._
-      val grams = t(s, dir, "documents")
+      // The bucketed grams sit behind one shared exchange by bucket, the
+      // key of every aggregate below, so the gram expansion and md5 run
+      // once for the four branches.
+      val grams = Shared(t(s, dir, "documents")
         .withColumn("ws", split(lower($"text"), " "))
         .select($"doc_id", $"lang",
           explode(when(size($"ws") >= 2, expr(
@@ -557,6 +562,7 @@ object CurationQueries {
         .withColumn("bucket",
           (conv(substring(md5($"gram"), 1, 8), 16, 10).cast("long")
             % DsirBuckets).cast("int"))
+        .repartition($"bucket"))
       val tgt = grams.filter($"lang" === "en")
         .groupBy($"bucket").agg(count(lit(1)).as("tc"))
       val all = grams.groupBy($"bucket").agg(count(lit(1)).as("rc"))
@@ -812,8 +818,12 @@ object CurationQueries {
     "q267_span_surgery" -> { (s, dir) =>
       import s.implicits._
       val K = 5
-      val d = t(s, dir, "documents").filter($"text".isNotNull)
+      // The token arrays sit behind one shared exchange by doc_id: the four
+      // branches read the split once, and the per-document aggregate and
+      // the final join need no shuffle of their own.
+      val d = Shared(t(s, dir, "documents").filter($"text".isNotNull)
         .select($"doc_id", split(lower($"text"), " ").as("ws"))
+        .repartition($"doc_id"))
       def grams(df: DataFrame) = df.select($"doc_id",
         posexplode(when(size($"ws") >= K, expr(
           s"transform(sequence(0, size(ws) - $K), i -> md5(concat_ws(' ', slice(ws, i + 1, $K))))"))

@@ -59,19 +59,21 @@ object DedupQueries {
       .filter($"text".isNotNull)
       .select($"doc_id".cast("long"), split(lower($"text"), " ").as("toks"))
       .as[(Long, Seq[String])]
+      // Distinct per document row, as the oracle's list_distinct is (doc_id
+      // keys the documents table), so no aggregate is needed to dedupe.
       .flatMap { case (id, toks) =>
         toks.iterator.sliding(ShingleK).withPartial(false)
-          .map(w => (id, w.mkString(" ")))
+          .map(_.mkString(" ")).distinct.map(sh => (id, sh))
       }
       .toDF("doc_id", "shingle")
-      .distinct()
-      // Shared: consumers branch this frame 3-4 ways (pair join sides, df
-      // filter, per-doc counts, signature + verification sets). Left to
-      // the optimizer, each branch prunes and filters its own copy, the
-      // copies differ, and the scan + shingle flatMap + distinct executes
-      // once PER BRANCH (4× in q31's physical plan). Behind the barrier
-      // every branch plans the same subtree, so the distinct's shuffle
-      // runs once and the other branches reuse it.
+      // Shared over one exchange by doc_id: consumers branch this frame
+      // 3-4 ways (pair join sides, df filter, per-doc counts, signature +
+      // verification sets). Left to the optimizer, each branch prunes and
+      // filters its own copy and the scan + shingle flatMap executes once
+      // PER BRANCH (4× in q31's physical plan). Behind the barrier every
+      // branch reads the one exchange, so the flatMap runs once, and the
+      // per-doc consumers need no shuffle of their own.
+      .repartition($"doc_id")
       .transform(Shared(_))
   }
 
@@ -272,11 +274,12 @@ object DedupQueries {
     // carry only (32-char digest, doc_id) rows, never document text.
     "q107_winnow_fingerprint_pairs" -> { (s, dir) =>
       import s.implicits._
-      // Pinned: branched three ways (df filter + both join sides), and
-      // winnowRows has no shuffle that a Shared barrier could let the
-      // branches reuse, so each branch would fingerprint every document
-      // again (measured 1.8× slower at sf0.1 than this one build job).
-      val inv = Pin(winnowRows(s, dir))
+      // Branched three ways (df filter + both join sides), all keyed on
+      // fp: the fingerprints sit behind one shared exchange by fp, so each
+      // document is fingerprinted once and no branch shuffles again.
+      // (Shared over winnowRows alone has no shuffle to reuse: every
+      // branch re-fingerprinted the corpus, 1.8× slower at sf0.1.)
+      val inv = Shared(winnowRows(s, dir).repartition($"fp"))
       val keep = inv.groupBy($"fp").agg(count(lit(1)).as("df"))
         .filter($"df" >= 2 && $"df" <= 20)
         .select($"fp")
@@ -709,12 +712,16 @@ object DedupQueries {
     "q143_dup_span_coverage" -> { (s, dir) =>
       import s.implicits._
       val K = ShingleK
-      val pos = t(s, dir, "documents")
+      val pos = Shared(t(s, dir, "documents")
         .withColumn("ws", split(lower($"text"), " "))
         .select($"doc_id", size($"ws").cast("long").as("n_tokens"),
           posexplode(when(size($"ws") >= K, expr(
             s"transform(sequence(0, size(ws) - $K), i -> md5(concat_ws(' ', slice(ws, i + 1, $K))))"))
             .otherwise(expr("array()"))).as(Seq("pos", "h")))
+        // One exchange by gram hash holds the md5'd grams: the df index and
+        // the rejoin both key on h, so neither recomputes the grams nor
+        // shuffles them again.
+        .repartition($"h"))
       val dup = pos.groupBy($"h")
         .agg(countDistinct($"doc_id").as("df")).filter($"df" >= 2)
       val covered = pos.join(dup, "h")

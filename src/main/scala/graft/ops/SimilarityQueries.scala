@@ -58,9 +58,12 @@ object SimilarityQueries {
         shiftright($"sig", SrpBits - SrpBandBits * (j + 1))
           .bitwiseAND(lit((1 << SrpBandBits) - 1)).as("bv"))
     }
-    e.withColumn("sig", VectorFunctions.srpSig($"emb"))
+    // Both sides of the candidate self-join read the band rows through
+    // one shared exchange on the join key, so the projections run once.
+    Shared(e.withColumn("sig", VectorFunctions.srpSig($"emb"))
       .select($"vec_id", explode(array(bands: _*)).as("bd"))
       .select($"vec_id", $"bd.band".as("band"), $"bd.bv".as("bv"))
+      .repartition($"band", $"bv"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

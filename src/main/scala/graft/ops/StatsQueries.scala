@@ -1008,10 +1008,7 @@ object StatsQueries {
     // engine float-sum ordering never applies.
     "q171_llr_collocations" -> { (s, dir) =>
       import s.implicits._
-      val wprev = t(s, dir, "documents")
-        .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
-        .withColumn("prev",
-          lag($"tok", 1).over(Window.partitionBy($"doc_id").orderBy($"pos")))
+      val wprev = TextQueries.tokensWithPrev(s, dir)
       val bi = Shared(wprev.filter($"prev".isNotNull)
         .groupBy($"prev", $"tok").agg(count(lit(1)).as("k11")))
       val rf = bi.groupBy($"prev").agg(sum($"k11").as("r_c"))
@@ -1493,10 +1490,14 @@ object StatsQueries {
             md5(concat(lit("vn:"), $"shard", lit(":"), $"vi".cast("string"))),
             1, 12), 16, 10).cast("long")))
       }
-      val keys = t(s, dir, "customer")
+      // The key positions sit below one shared exchange: left inline, the
+      // md5 → conv would be evaluated inside the cross join's loop, once
+      // per (key, vnode) pair rather than once per key.
+      val keys = Shared(t(s, dir, "customer")
         .select($"c_custkey".as("k"),
           conv(substring(md5(concat(lit("k:"), $"c_custkey".cast("string"))),
             1, 12), 16, 10).cast("long").as("kpos"))
+        .repartition($"k"))
       def assign(r: DataFrame, col: String): DataFrame = {
         val m = keys.crossJoin(r)
           .groupBy($"k")
@@ -1508,15 +1509,20 @@ object StatsQueries {
       }
       val before = assign(ring(None), "shard_before")
       val after = assign(ring(Some("s3")), "shard_after")
-      val j = Shared(before.join(after, "k")
-        .withColumn("moved", ($"shard_before" =!= $"shard_after").cast("long")))
-      val tot = j.agg(count(lit(1)).as("n_keys"), sum($"moved").as("n_moved"))
-      j.groupBy($"shard_after".as("shard"))
-        .agg(count(lit(1)).as("n_after"), sum($"moved").as("moved_in"))
-        .join(j.groupBy($"shard_before".as("shard"))
-          .agg(count(lit(1)).as("n_before")), Seq("shard"), "full_outer")
-        .na.fill(0L, Seq("n_after", "moved_in", "n_before"))
-        .crossJoin(broadcast(tot))
+      // One pass over the joined keys: each key counts once toward its old
+      // shard and once, with its moved flag, toward its new one, so the
+      // per-shard table is one aggregate and the totals are its column sums.
+      val per = Shared(before.join(after, "k")
+        .select(explode(array(
+          struct($"shard_before".as("shard"), lit(1L).as("b"), lit(0L).as("a"),
+            lit(0L).as("m")),
+          struct($"shard_after".as("shard"), lit(0L).as("b"), lit(1L).as("a"),
+            ($"shard_before" =!= $"shard_after").cast("long").as("m")))).as("e"))
+        .groupBy($"e.shard".as("shard"))
+        .agg(sum($"e.b").as("n_before"), sum($"e.a").as("n_after"),
+          sum($"e.m").as("moved_in")))
+      val tot = per.agg(sum($"n_before").as("n_keys"), sum($"moved_in").as("n_moved"))
+      per.crossJoin(broadcast(tot))
         .select($"shard", $"n_before", $"n_after", $"moved_in",
           round($"n_moved".cast("double") / $"n_keys", 6).as("moved_frac"))
         .orderBy($"shard")
@@ -3637,7 +3643,10 @@ object StatsQueries {
       import s.implicits._
       val w = Window.partitionBy($"o_custkey")
         .orderBy($"o_orderdate".desc, $"o_orderkey".desc)
-      val ranked = Shared(t(s, dir, "orders")
+      // Pinned: the top-5 collect below is its own Spark job, run while
+      // the query is built, and the returned plan reads the split again;
+      // exchange reuse does not reach across the two executions.
+      val ranked = Pin(t(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey",
           row_number().over(w).as("rn")))
       val brandOf = broadcast(t(s, dir, "part")
@@ -3733,6 +3742,9 @@ object StatsQueries {
           posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
       val cnt = toks.groupBy($"tok").agg(count(lit(1)).as("c"))
       val tot = cnt.agg(sum($"c").as("total"))
+      // The kept tokens sit behind one shared exchange on the context
+      // join's key: the subsampling (a join, a broadcast and an md5 per
+      // token) runs once for both sides of that join.
       val kept = Shared(toks.join(cnt, "tok").crossJoin(broadcast(tot))
         .withColumn("keep", least(lit(1.0),
           sqrt(lit(SkipgramT.toDouble) * $"total".cast("double") /
@@ -3742,7 +3754,8 @@ object StatsQueries {
             $"pos".cast("string"))), 1, 8), 16, 10).cast("long")
             .cast("double") / lit(4294967296.0))
         .filter($"u" < $"keep")
-        .select($"doc_id", $"pos", $"tok"))
+        .select($"doc_id", $"pos", $"tok")
+        .repartition($"doc_id", $"pos"))
       val offsets = (-SkipgramWindow to SkipgramWindow).filter(_ != 0)
       val ctx = kept
         .withColumn("off", explode(typedLit(offsets)))

@@ -36,6 +36,18 @@ object TextQueries {
   private def sqlHits(words: Seq[String]): String =
     s"len(regexp_extract_all(lower(text), '\\b(${words.mkString("|")})\\b'))"
 
+  /** (doc_id, pos, tok, prev): every whitespace token of every document
+    * with the token before it in the same document (NULL at pos 0) — the
+    * bigram stream under q88, q111, q171 and q263. The predecessor is read
+    * from the document's own token array, so no window shuffles and sorts
+    * the token stream, and the frame is per-row work each branch can
+    * afford to redo. */
+  private[ops] def tokensWithPrev(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
+      .select(col("doc_id"), col("ws"), posexplode(col("ws")).as(Seq("pos", "tok")))
+      .select(col("doc_id"), col("pos"), col("tok"), expr("get(ws, pos - 1)").as("prev"))
+
   /** Adds n_tokens / avg_token_len / stop_ratio / quality to ANY frame
     * with `text` and `n_chars` columns — the single definition of the
     * quality formula, shared by q38/q68 and the streaming curation gate
@@ -468,11 +480,7 @@ object TextQueries {
     // shared round(…, 6), exactly as in q81.
     "q88_bigram_logprob" -> { (s, dir) =>
       import s.implicits._
-      val wprev = Shared(
-        t(s, dir, "documents")
-          .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
-          .withColumn("prev",
-            lag($"tok", 1).over(Window.partitionBy($"doc_id").orderBy($"pos"))))
+      val wprev = tokensWithPrev(s, dir)
       val uni = wprev.groupBy($"tok").agg(count(lit(1)).as("c_w"))
       val tot = uni.agg(sum($"c_w").as("total"))
       val bi = wprev.filter($"prev".isNotNull)
@@ -594,13 +602,9 @@ object TextQueries {
     // ln's ≤1-ulp wobble remains, absorbed by round(…, 6).
     "q111_pmi_bigrams" -> { (s, dir) =>
       import s.implicits._
-      // Shared before branching: uni / totals / bi all derive from the
-      // same token+prev frame (q88's rationale).
-      val wprev = Shared(
-        t(s, dir, "documents")
-          .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
-          .withColumn("prev",
-            lag($"tok", 1).over(Window.partitionBy($"doc_id").orderBy($"pos"))))
+      // uni / totals / bi all derive from the same token+prev frame, which
+      // is per-row work with no shuffle: each branch reads it directly.
+      val wprev = tokensWithPrev(s, dir)
       val uni = wprev.groupBy($"tok").agg(count(lit(1)).as("c_w"))
       val totals = wprev.agg(count(lit(1)).as("n_tok"),
         sum(when($"prev".isNotNull, 1L).otherwise(0L)).as("n_bi"))
@@ -1032,11 +1036,7 @@ object TextQueries {
     // the position-ordered fold + shared round(…, 6), as in q81/q88.
     "q263_kneser_ney" -> { (s, dir) =>
       import s.implicits._
-      val wprev = Shared(
-        t(s, dir, "documents")
-          .select($"doc_id", posexplode(split(lower($"text"), " ")).as(Seq("pos", "tok")))
-          .withColumn("prev",
-            lag($"tok", 1).over(Window.partitionBy($"doc_id").orderBy($"pos"))))
+      val wprev = tokensWithPrev(s, dir)
       // One corpus-scale aggregate, shared: context stats, continuation
       // counts, and the type total are all rollups of it.
       val bi = Shared(wprev.filter($"prev".isNotNull)
@@ -1189,8 +1189,12 @@ object TextQueries {
     // attach is an integer equi-join.
     "q273_quantile_normalize" -> { (s, dir) =>
       import s.implicits._
-      val q = qualityScored(s, dir)
+      // The scored rows sit behind one shared exchange by source (the
+      // per-source window's key): the per-row scoring runs once for the
+      // window, the pooled rank and the total.
+      val q = Shared(qualityScored(s, dir)
         .select($"doc_id", $"source", $"quality")
+        .repartition($"source"))
       val wsrc = Window.partitionBy($"source")
         .orderBy($"quality".asc, $"doc_id".asc)
       val ranked = q

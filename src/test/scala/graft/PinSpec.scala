@@ -35,6 +35,9 @@ class PinSpec extends AnyFunSuite with SparkSuite {
     assert(sc.getCheckpointDir.isEmpty)
   }
 
+  // Pins still write a reliable copy that nothing deletes: the memo builds
+  // (q163's `day`, for one), the loops, and the frames a build-time collect
+  // also reads (q73, q236). SCALE.md "Lineage pinning" lists every one.
   test("a query that shares a frame in its plan writes no checkpoint under a reliable dir") {
     val sc = spark.sparkContext
     val dir = java.nio.file.Files.createTempDirectory("graft-shared-ckpt").toString

@@ -67,14 +67,14 @@ class SharedSpec extends AnyFunSuite with SparkSuite {
     assert(GraftPlanApi.plannerStrategies(spark, new GraftExtensions()).contains(SharedStrategy))
   }
 
-  /** Queries whose build ran lazy checkpoints or the dedup spine's eager
-    * pin and no other Spark job. Every such frame is Shared or unpinned
-    * now, so building them runs nothing. */
+  /** Queries whose build ran lazy checkpoints or an in-plan eager pin (the
+    * dedup spine's, q107's fingerprints) and no other Spark job. Every
+    * such frame is Shared or unpinned now, so building them runs nothing. */
   private val formerPinQueries = Seq(
     "q31_neardup_jaccard", "q32_dedup_minhash_lsh", "q53_decontamination",
     "q76_curation_pipeline", "q83_containment_neardup", "q84_edit_neardup",
     "q85_incremental_lsh", "q88_bigram_logprob", "q95_source_lift",
-    "q104_type_transitions", "q111_pmi_bigrams",
+    "q104_type_transitions", "q107_winnow_fingerprint_pairs", "q111_pmi_bigrams",
     "q112_contamination_frac", "q113_boilerplate_strip", "q115_source_overlap",
     "q118_shingle_novelty", "q120_source_kl", "q126_token_gini",
     "q128_rolling_active", "q131_prefix_filter_jaccard", "q144_revenue_attribution",
