@@ -667,9 +667,13 @@ object CurationQueries {
     // table and each batch of anchors joins it the same way.
     "q261_negative_sampling" -> { (s, dir) =>
       import s.implicits._
+      // GlobalRankExec is not an exchange: behind the barrier alone each
+      // branch would run both rank passes, so the ranks end in a shared
+      // exchange on rk, the draw join's key
       val ranked = Shared(GlobalRank.withGlobalRank(
           t(s, dir, "documents").select($"doc_id"),
-          Seq($"doc_id".asc), "rk", "n"))
+          Seq($"doc_id".asc), "rk", "n")
+        .repartition($"rk"))
       val draws = ranked.filter($"doc_id" % 50 === 0)
         .select($"doc_id".as("anchor_id"), $"rk".as("a_rk"), $"n")
         .withColumn("slot", explode(sequence(lit(0), lit(NegK - 1))))

@@ -654,7 +654,10 @@ object DedupQueries {
           toks.iterator.sliding(ShingleK).withPartial(false)
             .map(w => (src, w.mkString(" ")))
         }
-        .toDF("source", "shingle").distinct())
+        .toDF("source", "shingle").distinct()
+        // the distinct runs once; its rows sit in one exchange on the
+        // self-join's key
+        .repartition($"shingle"))
       val sizes = ss.groupBy($"source").agg(count(lit(1)).as("n"))
       val shared = ss.toDF("src_a", "shingle")
         .join(ss.toDF("src_b", "shingle"), "shingle")

@@ -2322,11 +2322,15 @@ object StatsQueries {
       import s.implicits._
       val sc0 = TextQueries.qualityScored(s, dir)
         .select($"doc_id", $"source", $"quality")
+      // Both rank frames end in a shared exchange, so each rank's passes
+      // run once for all their branches (GlobalRankExec is not reused).
       val g = Shared(GlobalRank.withGlobalRank(sc0,
-        Seq($"source".asc, $"quality".asc, $"doc_id".asc), "grk", "n_all"))
+        Seq($"source".asc, $"quality".asc, $"doc_id".asc), "grk", "n_all")
+        .repartition($"source"))
       val pooled = Shared(GlobalRank.withGlobalRank(sc0,
         Seq($"quality".asc, $"doc_id".asc), "prk", "n_tot")
-        .select($"prk", $"quality".as("pq")))
+        .select($"prk", $"quality".as("pq"))
+        .repartition($"prk"))
       val ss = g.groupBy($"source")
         .agg(min($"grk").as("rk0"), count(lit(1)).as("n_s"))
       val docs = g.join(broadcast(ss), "source")
@@ -2977,10 +2981,13 @@ object StatsQueries {
       val en = iv.groupBy($"ems".as("ms")).agg(count(lit(1)).as("n_end"))
       val pts = st.join(en, Seq("ms"), "full_outer")
         .na.fill(0L, Seq("n_start", "n_end"))
+      // the prefix sums end in a shared exchange by day, the key of both
+      // branches, so the prefix-sum passes run once
       val act = Shared(GlobalRank.withGlobalPrefixSum(
           pts, Seq($"ms"), $"n_start" - $"n_end", "rk", "nn", "cum_d", "tot")
         .select($"ms", to_date(timestamp_millis($"ms")).as("d"),
-          ($"cum_d" + $"n_end").as("active")))
+          ($"cum_d" + $"n_end").as("active"))
+        .repartition($"d"))
       val peak = act.groupBy($"d").agg(max($"active").as("peak"))
       act.join(broadcast(peak), Seq("d"))
         .filter($"active" === $"peak")

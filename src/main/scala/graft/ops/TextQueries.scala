@@ -526,10 +526,13 @@ object TextQueries {
       // from `st`; without the barrier each branch prunes its own copy
       // and the corpus-wide token explode + count could execute four
       // times. The shared shuffle carries the (source, token) table,
-      // which is sources × vocabulary bounded.
+      // which is sources × vocabulary bounded; it ends in an exchange by
+      // token, so the table's final aggregate runs once and the per-token
+      // rollup and its join back need no shuffle of their own.
       val st = Shared(t(s, dir, "documents")
         .select($"source", explode(split(lower($"text"), " ")).as("token"))
-        .groupBy($"source", $"token").agg(count(lit(1)).as("n_st")))
+        .groupBy($"source", $"token").agg(count(lit(1)).as("n_st"))
+        .repartition($"token"))
       val perTok = st.groupBy($"token").agg(sum($"n_st").as("n_t"))
       val perSrc = st.groupBy($"source").agg(sum($"n_st").as("n_s"))
       val total = st.agg(sum($"n_st").as("n"))
@@ -662,9 +665,13 @@ object TextQueries {
     // + one final round(6) absorb partial-agg order noise (~1e-13 ≪ grain).
     "q120_source_kl" -> { (s, dir) =>
       import s.implicits._
+      // the (source, tok) table ends in a shared exchange by tok: its
+      // final aggregate runs once, and the per-token rollup and its join
+      // back need no shuffle of their own
       val st = Shared(t(s, dir, "documents")
         .select($"source", explode(split(lower($"text"), " ")).as("tok"))
-        .groupBy($"source", $"tok").agg(count(lit(1)).as("c_st")))
+        .groupBy($"source", $"tok").agg(count(lit(1)).as("c_st"))
+        .repartition($"tok"))
       val srcTot = st.groupBy($"source")
         .agg(sum($"c_st").as("n_s"), count(lit(1)).as("vocab_s"))
       val tokTot = st.groupBy($"tok").agg(sum($"c_st").as("c_t"))
