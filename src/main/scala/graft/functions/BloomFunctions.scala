@@ -1,15 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanApi}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
 /**
  * Column-API face over Spark's own Bloom-filter expressions — the pair
  * Catalyst uses for runtime join pruning (`BloomFilterAggregate` /
- * `BloomFilterMightContain`, both codegen-capable), surfaced as session
- * functions the same way as [[VectorFunctions]]. Re-using the engine's
+ * `BloomFilterMightContain`, both codegen-capable), surfaced as Column
+ * faces the same way as [[VectorFunctions]]. Re-using the engine's
  * sketch keeps the build distributive (partial bitsets OR-merge like any
  * aggregate) and the membership probe inside whole-stage codegen — no
  * UDF, no custom serialization.
@@ -25,26 +25,6 @@ object BloomFunctions {
   val AggName = "graft_bloom_agg"
   val ContainsName = "graft_might_contain"
 
-  /** Idempotent per-session registration. Arity guards run in the
-    * builders (= at analysis time) so malformed SQL calls fail
-    * resolution with a message, not an index error. */
-  def register(spark: SparkSession): Unit = {
-    def arity(name: String, n: Int, exprs: Seq[_]): Unit =
-      if (exprs.length != n)
-        throw new IllegalArgumentException(
-          s"$name takes exactly $n arguments, got ${exprs.length}")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AggName, exprs => {
-        arity(AggName, 3, exprs)
-        new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ContainsName, exprs => {
-        arity(ContainsName, 2, exprs)
-        new BloomFilterMightContain(exprs(0), exprs(1))
-      }, "built-in")
-  }
-
   /** Distributed Bloom build over `xxhash64(col)`: only the final bitset
     * (never the keys) reaches the driver.
     *
@@ -56,7 +36,6 @@ object BloomFunctions {
     * restore them after) so the caller gets the filter they asked for. */
   def build(df: DataFrame, col: Column, expectedItems: Long, numBits: Long): Array[Byte] = {
     val spark = df.sparkSession
-    register(spark)
     val caps = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> expectedItems,
       "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> numBits)
@@ -65,8 +44,8 @@ object BloomFunctions {
       prev.foreach { case (k, cur, want) =>
         if (cur.forall(_.toLong < want)) spark.conf.set(k, want)
       }
-      df.select(call_function(AggName, xxhash64(col),
-          lit(expectedItems), lit(numBits)).as("bf"))
+      df.select(GraftPlanApi.face(xxhash64(col))(x => new BloomFilterAggregate(
+          x(0), Literal(expectedItems), Literal(numBits)).toAggregateExpression()).as("bf"))
         .head().getAs[Array[Byte]]("bf")
     } finally prev.foreach {
       case (k, Some(v), _) => spark.conf.set(k, v)
@@ -77,8 +56,6 @@ object BloomFunctions {
   /** Membership probe against a built filter. No false negatives; false
     * positives at the filter's fpp — callers needing exactness follow
     * with a verify join (see q73). */
-  def mightContain(spark: SparkSession, bloom: Array[Byte], col: Column): Column = {
-    register(spark)
-    call_function(ContainsName, lit(bloom), xxhash64(col))
-  }
+  def mightContain(bloom: Array[Byte], col: Column): Column =
+    GraftPlanApi.face(xxhash64(col))(x => new BloomFilterMightContain(Literal(bloom), x(0)))
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -162,21 +162,10 @@ object CountMin {
   def bucket(seed: Int, item: String, width: Int): Int =
     bucketOfBytes(seed, item.getBytes(StandardCharsets.UTF_8), width)
 
-  /** Idempotent per-session registration (same mechanism as
-    * [[FrequentItems.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => {
-        if (exprs.length != 3)
-          throw new IllegalArgumentException(
-            s"$Name(item, depth, width) takes exactly 3 arguments, got ${exprs.length}")
-        CountMinSketchAgg(exprs(0), exprs(1), exprs(2))
-      }, "built-in")
-
-  /** Column face: struct(n, cells) (requires register). */
+  /** Column face: struct(n, cells). */
   def sketch(item: org.apache.spark.sql.Column, depth: Int, width: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function(Name, item,
-      org.apache.spark.sql.functions.lit(depth), org.apache.spark.sql.functions.lit(width))
+    org.apache.spark.sql.GraftPlanApi.face(item)(x =>
+      CountMinSketchAgg(x(0), Literal(depth), Literal(width)).toAggregateExpression())
 }
 
 /** Count–min state: depth×width counters + the exact processed count. */

@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -128,24 +128,10 @@ case class FrequentItemsSketch(
 object FrequentItems {
   val Name = "graft_freq_items"
 
-  /** Idempotent per-session registration (same mechanism as
-    * [[VectorFunctions.register]]). The arity guard runs in the builder —
-    * i.e. at analysis time — so `graft_freq_items(x)` fails resolution
-    * with a real message instead of an IndexOutOfBoundsException. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"$Name(item, capacity) takes exactly 2 arguments, got ${exprs.length}")
-        FrequentItemsSketch(exprs(0), exprs(1))
-      }, "built-in")
-
-  /** Column face: struct(n, entries[(item, count)]) (requires register). */
-  def sketch(item: org.apache.spark.sql.Column, capacity: Int): org.apache.spark.sql.Column = {
-    org.apache.spark.sql.functions.call_function(Name, item,
-      org.apache.spark.sql.functions.lit(capacity))
-  }
+  /** Column face: struct(n, entries[(item, count)]). */
+  def sketch(item: org.apache.spark.sql.Column, capacity: Int): org.apache.spark.sql.Column =
+    org.apache.spark.sql.GraftPlanApi.face(item)(x =>
+      FrequentItemsSketch(x(0), Literal(capacity)).toAggregateExpression())
 }
 
 /** Misra–Gries state: ≤ cap counters + the exact processed count. */

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanApi}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
 
 /**
@@ -111,17 +110,6 @@ object PHashFunctions {
     new GenericArrayData(Array(w0, w1))
   }
 
-  /** Idempotent per-session registration (same mechanism as
-    * [[VectorFunctions.register]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"$Name(payload) takes exactly 1 argument, got ${exprs.length}")
-        PHash128(exprs(0))
-      }, "built-in")
-
-  /** Column-API face (requires `register`). */
-  def phash128(payload: Column): Column = call_function(Name, payload)
+  /** Column-API face. */
+  def phash128(payload: Column): Column = GraftPlanApi.face(payload)(x => PHash128(x(0)))
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanApi}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -110,17 +109,7 @@ object StringSimilarity {
     }
   }
 
-  /** Idempotent per-session registration (the VectorFunctions pattern). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      JaroWinklerName, exprs => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"$JaroWinklerName takes exactly 2 arguments, got ${exprs.length}")
-        JaroWinkler(exprs(0), exprs(1))
-      }, "built-in")
-
-  /** Column-API face (requires `register`). */
+  /** Column-API face. */
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function(JaroWinklerName, a, b)
+    GraftPlanApi.face(a, b)(x => JaroWinkler(x(0), x(1)))
 }

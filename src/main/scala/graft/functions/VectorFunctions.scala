@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftPlanApi, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlanApi}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType}
 
 /**
@@ -734,86 +733,42 @@ object VectorFunctions {
   lazy val srpPlanes: Seq[Seq[Double]] =
     (0 until SrpBits).map(b => (0 until SrpDim).map(d => srpUnit(b, d)))
 
-  /** Idempotent per-session registration; call before using `cosine`/`topk`.
-    * Arity guards run in the builders (= at analysis time) so malformed
-    * SQL calls fail resolution with a message, not an index error. */
-  def register(spark: SparkSession): Unit = {
-    def arity(name: String, n: Int, exprs: Seq[Expression]): Unit =
-      if (exprs.length != n)
-        throw new IllegalArgumentException(
-          s"$name takes exactly $n arguments, got ${exprs.length}")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CosineName, exprs => {
-        arity(CosineName, 2, exprs); CosineSimilarity(exprs(0), exprs(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      LongDotName, exprs => {
-        arity(LongDotName, 2, exprs); LongDotProduct(exprs(0), exprs(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      OverlapName, exprs => {
-        arity(OverlapName, 2, exprs); LongOverlapCount(exprs(0), exprs(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      TopKName, exprs => {
-        arity(TopKName, 3, exprs); TopKPairs(exprs(0), exprs(1), exprs(2))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SrpName, exprs => {
-        arity(SrpName, 1, exprs); SrpSignature(exprs(0), srpPlanes)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AndAnyName, exprs => {
-        arity(AndAnyName, 2, exprs); LongAndAny(exprs(0), exprs(1))
-      }, "built-in")
-  }
+  /** Column-API face of [[CosineSimilarity]]. */
+  def cosine(a: Column, b: Column): Column =
+    GraftPlanApi.face(a, b)(x => CosineSimilarity(x(0), x(1)))
 
-  /** Column-API face of [[CosineSimilarity]] (requires `register`). */
-  def cosine(a: Column, b: Column): Column = call_function(CosineName, a, b)
+  /** Column-API face of [[LongDotProduct]]. */
+  def ldot(a: Column, b: Column): Column =
+    GraftPlanApi.face(a, b)(x => LongDotProduct(x(0), x(1)))
 
-  /** Column-API face of [[LongDotProduct]] (requires `register`). */
-  def ldot(a: Column, b: Column): Column = call_function(LongDotName, a, b)
+  /** Column-API face of [[LongOverlapCount]]. */
+  def loverlap(a: Column, b: Column): Column =
+    GraftPlanApi.face(a, b)(x => LongOverlapCount(x(0), x(1)))
 
-  /** Column-API face of [[LongOverlapCount]] (requires `register`). */
-  def loverlap(a: Column, b: Column): Column = call_function(OverlapName, a, b)
-
-  /** Column-API face of [[LongAndAny]] (requires `register`). */
-  def landAny(a: Column, b: Column): Column = call_function(AndAnyName, a, b)
+  /** Column-API face of [[LongAndAny]]. */
+  def landAny(a: Column, b: Column): Column =
+    GraftPlanApi.face(a, b)(x => LongAndAny(x(0), x(1)))
 
   /** Column-API face of [[TopKPairs]]: array of (score,id) structs,
-    * best-first (requires `register`). */
+    * best-first. */
   def topk(score: Column, id: Column, k: Int): Column =
-    call_function(TopKName, score, id, org.apache.spark.sql.functions.lit(k))
+    GraftPlanApi.face(score, id)(x => TopKPairs(x(0), x(1), Literal(k)).toAggregateExpression())
 
-  /** Column-API face of [[SrpSignature]] over the default plane family
-    * (requires `register`). */
-  def srpSig(emb: Column): Column = call_function(SrpName, emb)
+  /** Column-API face of [[SrpSignature]] over the default plane family. */
+  def srpSig(emb: Column): Column =
+    GraftPlanApi.face(emb)(x => SrpSignature(x(0), srpPlanes))
 
   /** Column-API face of [[PqEncode]]. Codebooks are TRAINED per corpus
-    * (ops/Pq), so unlike the fixed-family functions above this registers
-    * the function with the given codebooks captured at call time —
-    * createOrReplace semantics make the last registration win within a
-    * session, which is exactly the trained-model-scoped lifetime wanted. */
-  def pqEncode(spark: SparkSession, emb: Column,
-               codebooks: Seq[Seq[Seq[Double]]]): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PqEncodeName, exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"$PqEncodeName takes exactly 1 argument, got ${exprs.length}")
-        PqEncode(exprs(0), codebooks)
-      }, "built-in")
-    call_function(PqEncodeName, emb)
-  }
+    * (ops/Pq), so they are per-call data held by the expression. */
+  def pqEncode(emb: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
+    GraftPlanApi.face(emb)(x => PqEncode(x(0), codebooks))
 
-  /** Column-API face of [[MinSqDist]]. The centers are per-call data (a
-    * greedy round's picks, a fixture's mean), so the Column is built
-    * straight from the expression rather than through a registered
-    * session function. */
-  def minSqDist(spark: SparkSession, emb: Column, centers: Seq[Seq[Double]]): Column =
-    GraftPlanApi.column(MinSqDist(GraftPlanApi.expression(spark, emb), centers))
+  /** Column-API face of [[MinSqDist]]; the centers are per-call data (a
+    * greedy round's picks, a fixture's mean). */
+  def minSqDist(emb: Column, centers: Seq[Seq[Double]]): Column =
+    GraftPlanApi.face(emb)(x => MinSqDist(x(0), centers))
 
-  /** Column-API face of [[CenteredDot]]; built like [[minSqDist]]. */
-  def centeredDot(spark: SparkSession, emb: Column, mu: Seq[Double], v: Seq[Double]): Column =
-    GraftPlanApi.column(CenteredDot(GraftPlanApi.expression(spark, emb), mu, v))
+  /** Column-API face of [[CenteredDot]]. */
+  def centeredDot(emb: Column, mu: Seq[Double], v: Seq[Double]): Column =
+    GraftPlanApi.face(emb)(x => CenteredDot(x(0), mu, v))
 }

@@ -92,7 +92,7 @@ object CurationQueries {
       val bloom = graft.functions.BloomFunctions.build(
         benchSh, $"shingle", expectedItems = 100000L, numBits = 1200000L)
       sh.filter($"doc_id" >= 20)
-        .filter(graft.functions.BloomFunctions.mightContain(s, bloom, $"shingle"))
+        .filter(graft.functions.BloomFunctions.mightContain(bloom, $"shingle"))
         .join(broadcast(benchSh), "shingle")
         .groupBy($"doc_id")
         .agg(count(lit(1)).as("n_shared"))

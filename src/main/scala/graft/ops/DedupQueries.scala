@@ -1151,7 +1151,6 @@ object DedupQueries {
     val vIdx = broadcast(s.createDataFrame(
       vocab.toIndexedSeq.zipWithIndex.map { case (tk, i) => (tk, i) })
       .toDF("tk", "idx"))
-    graft.functions.VectorFunctions.register(s)
     val sparse = w.join(vIdx, "tk")
     val dense = (sparse
       .groupBy(col("doc_id"))

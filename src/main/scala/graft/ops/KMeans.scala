@@ -44,7 +44,6 @@ object KMeans {
   def assign(e: DataFrame, centroids: Seq[(Int, Seq[Double])]): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    VectorFunctions.register(s) // idempotent; cosine() resolves through it
     val cents = broadcast(centroids.toDF("cent_id", "c_emb"))
     val scored = e.join(cents, lit(true))
       .withColumn("cos", VectorFunctions.cosine($"emb", $"c_emb"))

@@ -144,7 +144,6 @@ object MultimodalQueries {
    */
   private[graft] def phashDocs(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    graft.functions.PHashFunctions.register(s)
     // spread before the 128-bit gram-hash signature: per-row cost is the
     // md5 gram family over the whole payload, serialized by a single-file
     // scan otherwise (no-op on an already-parallel scan)

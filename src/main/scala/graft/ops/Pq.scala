@@ -71,7 +71,7 @@ object Pq {
     for (_ <- 1 to iters) {
       // One codegen encode pass + one (m, k, pos)-keyed aggregate.
       val cells = vecs
-        .select(VectorFunctions.pqEncode(s, $"emb", cb).as("codes"),
+        .select(VectorFunctions.pqEncode($"emb", cb).as("codes"),
           posexplode($"emb").as(Seq("i", "v")))
         .filter($"codes".isNotNull)
         .select(($"i" / dsub).cast("int").as("m"), ($"i" % dsub).as("pos"),

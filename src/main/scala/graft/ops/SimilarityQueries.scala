@@ -52,7 +52,6 @@ object SimilarityQueries {
     * Band values are pure bit arithmetic on the packed signature. */
   private def srpBandRows(s: SparkSession, e: DataFrame): DataFrame = {
     import s.implicits._
-    VectorFunctions.register(s)
     val bands = (0 until SrpBits / SrpBandBits).map { j =>
       struct(lit(j).as("band"),
         shiftright($"sig", SrpBits - SrpBandBits * (j + 1))
@@ -92,7 +91,6 @@ object SimilarityQueries {
     // ball-cover completeness every run.
     "q34_cosine_neardup" -> { (s, dir) =>
       import s.implicits._
-      VectorFunctions.register(s)
       val e = embs(s, dir)
       val cents = e.filter($"vec_id" < Cells)
         .select($"vec_id".as("cent_id"), $"emb".as("c_emb"))
@@ -106,12 +104,15 @@ object SimilarityQueries {
       // pairs (r9 advice).
       def ang(c: Column): Column = acos(least(greatest(c, lit(-1d)), lit(1d)))
       val eps = lit(1e-6)
-      val assigned = graft.plans.GroupTopK(
-          e.join(broadcast(cents), lit(true))
+      // Shared: the radii and both pair-join sides reuse the scoring and
+      // its exchange, and each redoes only the final heaps above it. The
+      // centroid attach is a Cross, like the spine's: no nested loop here
+      // carries a condition.
+      val assigned = Shared(graft.plans.GroupTopK(
+          e.crossJoin(broadcast(cents))
             .withColumn("ccos", VectorFunctions.cosine($"emb", $"c_emb")),
           Seq($"vec_id"), Seq($"ccos".desc, $"cent_id".asc), 1)
-        .select($"vec_id", $"cent_id".as("cell"), $"emb", ang($"ccos").as("cang"))
-        .transform(Pin(_))
+        .select($"vec_id", $"cent_id".as("cell"), $"emb", ang($"ccos").as("cang")))
       val radii = assigned.groupBy($"cell").agg(max($"cang").as("r"))
       val theta = ang(lit(NearDupThreshold.toDouble))
       // 16×16 control-plane spine: ordered cell pairs surviving the
@@ -139,7 +140,6 @@ object SimilarityQueries {
     // (broadcast); per-query ranking is a window over the scored scan.
     "q35_ann_topk" -> { (s, dir) =>
       import s.implicits._
-      VectorFunctions.register(s)
       val e = embs(s, dir)
       val q = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"emb".as("q_emb"))
@@ -159,7 +159,6 @@ object SimilarityQueries {
     // every scored row). Same deterministic order ⇒ same oracle as q35.
     "q35b_ann_topk_agg" -> { (s, dir) =>
       import s.implicits._
-      VectorFunctions.register(s)
       val e = embs(s, dir)
       val q = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"emb".as("q_emb"))
@@ -251,7 +250,6 @@ object SimilarityQueries {
     // only corpus-wide shuffle is the one-off cell assignment.
     "q54_ann_ivf" -> { (s, dir) =>
       import s.implicits._
-      VectorFunctions.register(s)
       val e = embs(s, dir)
       val cents = e.filter($"vec_id" < Cells)
         .select($"vec_id".as("cent_id"), $"emb".as("c_emb"))
@@ -329,18 +327,16 @@ object SimilarityQueries {
     // |cell|², bounded by balanced cells (k scales with corpus), never n².
     "q82_semdedup" -> { (s, dir) =>
       import s.implicits._
-      VectorFunctions.register(s)
       val e = embs(s, dir)
       val cents = e.filter($"vec_id" < Cells)
         .select($"vec_id".as("cent_id"), $"emb".as("c_emb"))
       val cellScores = e.join(broadcast(cents), lit(true))
         .withColumn("ccos", VectorFunctions.cosine($"emb", $"c_emb"))
-      // Pinned: three consumers (both pair-join sides + the final keep
-      // join) would otherwise each re-execute the assignment subtree.
-      val assigned = graft.plans.GroupTopK(cellScores,
+      // Shared: both pair-join sides and the final keep join reuse the
+      // scoring and its exchange, and each redoes only the final heaps.
+      val assigned = Shared(graft.plans.GroupTopK(cellScores,
           Seq($"vec_id"), Seq($"ccos".desc, $"cent_id".asc), 1)
-        .select($"vec_id", $"cent_id".as("cell"), $"emb")
-        .transform(Pin(_))
+        .select($"vec_id", $"cent_id".as("cell"), $"emb"))
       val dup = assigned.as("a").join(assigned.as("b"),
           col("a.cell") === col("b.cell") && col("b.vec_id") < col("a.vec_id"))
         .withColumn("cos", VectorFunctions.cosine(col("a.emb"), col("b.emb")))
@@ -405,7 +401,6 @@ object SimilarityQueries {
     // trick) — all 16 subspaces train in one shared CTE chain.
     "q130_ann_pq" -> { (s, dir) =>
       import s.implicits._
-      VectorFunctions.register(s)
       val e = embs(s, dir)
         .withColumn("nrm", sqrt(expr("aggregate(emb, 0D, (a, x) -> a + x * x)")))
         .filter($"nrm" > 0.0)
@@ -413,7 +408,7 @@ object SimilarityQueries {
         .transform(Pin(_)) // training iterations + encode + re-rank reuse it
       val model = Pq.fit(e, iters = 3, m = PqM)
       val codes = e.select($"vec_id",
-        graft.functions.VectorFunctions.pqEncode(s, $"emb", model.codebooks).as("codes"))
+        graft.functions.VectorFunctions.pqEncode($"emb", model.codebooks).as("codes"))
       // Exact distance tables for the Q query vectors (collected: Q rows of
       // control data, same policy as the k-means centroids).
       val dsub = model.codebooks.head.head.length
@@ -532,7 +527,6 @@ object SimilarityQueries {
     // parallel, never shuffles; per-val argmax rides GroupTopK k=1.
     "q123_embed_leakage" -> { (s, dir) =>
       import s.implicits._
-      VectorFunctions.register(s)
       val e = embs(s, dir)
         .withColumn("h", substring(md5($"vec_id".cast("string")), 1, 1))
       val train = e.filter($"h" <= "9" || $"h" === "a" || $"h" === "b")
@@ -586,7 +580,7 @@ object SimilarityQueries {
       val pcs = (0 until PcaK).map { k =>
         // + 0.0: canonicalize -0.0 (q139 note) — a centered coordinate
         // rounding to zero must hash identically across partition layouts.
-        (round(VectorFunctions.centeredDot(s, $"emb", mu.toSeq, vecs(k).toSeq), 6) +
+        (round(VectorFunctions.centeredDot($"emb", mu.toSeq, vecs(k).toSeq), 6) +
           lit(0d)).as(s"pc$k")
       }
       embs(s, dir).select(($"vec_id" +: pcs): _*).orderBy($"vec_id")
@@ -608,7 +602,7 @@ object SimilarityQueries {
       val ws = (0 until PcaK).map { k =>
         require(lam(k) > 0, s"non-positive eigenvalue $k: ${lam(k)}")
         val inv = 1.0 / math.sqrt(lam(k))
-        (round(VectorFunctions.centeredDot(s, $"emb", mu.toSeq, vecs(k).toSeq) *
+        (round(VectorFunctions.centeredDot($"emb", mu.toSeq, vecs(k).toSeq) *
           lit(inv), 6) + lit(0d)).as(s"w$k")
       }
       embs(s, dir).select(($"vec_id" +: ws): _*).orderBy($"vec_id")
@@ -630,7 +624,6 @@ object SimilarityQueries {
     // the whole pipeline exhaustively.
     "q153_mmr_diversify" -> { (s, dir) =>
       import s.implicits._
-      VectorFunctions.register(s)
       val e = embs(s, dir)
       val q = e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"emb".as("q_emb"))
@@ -710,10 +703,10 @@ object SimilarityQueries {
       val (n, mu, cov) = covStats(s, dir)
       val (lam, vecs) = Eigen.symmetric(cov)
       def dotSq(v: Array[Double]): Column = {
-        val p = VectorFunctions.centeredDot(s, $"emb", mu.toSeq, v.toSeq)
+        val p = VectorFunctions.centeredDot($"emb", mu.toSeq, v.toSeq)
         p * p
       }
-      val centeredSq = VectorFunctions.minSqDist(s, $"emb", Seq(mu.toSeq))
+      val centeredSq = VectorFunctions.minSqDist($"emb", Seq(mu.toSeq))
       val proj = embs(s, dir).select(
         (centeredSq.as("c2") +: (0 until PcaK).map(k => dotSq(vecs(k)).as(s"p$k"))): _*)
       val agg = proj.agg(avg($"c2").as("c2m"),
@@ -743,7 +736,6 @@ object SimilarityQueries {
     // the full pairwise form is O(n²) and adds nothing at corpus scale.
     "q142_label_silhouette" -> { (s, dir) =>
       import s.implicits._
-      VectorFunctions.register(s)
       val e = embs(s, dir)
       val cent = e.select($"label", posexplode($"emb").as(Seq("i", "x")))
         .groupBy($"label", $"i").agg(avg($"x").as("c"))
@@ -824,7 +816,7 @@ object SimilarityQueries {
     import s.implicits._
     e.filter(!$"vec_id".isin(centers.map(_._1): _*))
       .select($"vec_id", $"emb",
-        VectorFunctions.minSqDist(s, $"emb", centers.map(_._2)).as("dist"))
+        VectorFunctions.minSqDist($"emb", centers.map(_._2)).as("dist"))
       .orderBy($"dist".desc, $"vec_id".asc).limit(1)
   }
 

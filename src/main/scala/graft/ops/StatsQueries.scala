@@ -3255,7 +3255,6 @@ object StatsQueries {
     // block dominates.
     "q226_jw_blocking" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.StringSimilarity.register(s)
       val names = Shared(t(s, dir, "part")
         .groupBy($"p_name").agg(count(lit(1)).as("n_parts"))
         .withColumn("blk", split($"p_name", " ").getItem(0)))
@@ -3937,7 +3936,6 @@ object StatsQueries {
     // the q60/q87 salting problem); the u frame is ONE row broadcast.
     "q252_fs_linkage" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.StringSimilarity.register(s)
       val parts = t(s, dir, "part")
         .select($"p_partkey", $"p_name", $"p_brand", $"p_type", $"p_size",
           concat_ws(" ", split_part($"p_name", lit(" "), lit(1)),

@@ -402,7 +402,6 @@ object TextQueries {
     // not rows-only, despite the sketch in the middle.
     "q74_heavy_hitters" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.FrequentItems.register(s)
       val toks = t(s, dir, "documents")
         .select(explode(split(lower($"text"), " ")).as("token"))
       // One LAZY plan (no driver-side .head() — constructing the query
@@ -565,7 +564,6 @@ object TextQueries {
     // frame feeds both the exact probe counts and the sketch.
     "q110_countmin_freq" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.CountMin.register(s)
       val toks = t(s, dir, "documents")
         .select(explode(split(lower($"text"), " ")).as("tok"))
       val probe = toks.groupBy($"tok").agg(count(lit(1)).as("exact_n"))

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftPlanApi, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanApi, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -143,14 +143,6 @@ case class GroupTopKExec(
 
 object GroupTopK {
 
-  /** Install the full GroupTopK machinery into an existing session: the
-    * planner strategy plus the optimizer rewrite that turns window-top-k
-    * idioms ([[GroupTopKRewrite]]) into this operator. Idempotent. */
-  def install(spark: SparkSession): Unit = {
-    GraftPlanApi.ensureStrategy(spark, GroupTopKStrategy)
-    GraftPlanApi.ensureOptimizerRule(spark, GroupTopKRewrite)
-  }
-
   /** Public face: top-k rows per group under `order` (must be total). */
   def apply(df: DataFrame, groupCols: Seq[Column], order: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
@@ -167,11 +159,12 @@ object GroupTopK {
   }
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` registration path
-  * (the per-session runtime fallbacks are [[GroupTopK.install]] and the
-  * GlobalRank and Shared faces' `ensureStrategy`, for sessions built
-  * without it). Installs the three planner strategies and the window-top-k
-  * rewrite rule. */
+/** `spark.sql.extensions=graft.plans.GraftExtensions` registration path.
+  * Installs the three planner strategies (the GroupTopK, GlobalRank and
+  * Shared faces also `ensureStrategy` theirs, for sessions built without
+  * it) and the window-top-k rewrite rule, which has no other entry point:
+  * only a session built with these extensions rewrites window-top-k
+  * idioms onto GroupTopK. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)

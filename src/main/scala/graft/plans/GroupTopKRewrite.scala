@@ -29,8 +29,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
  * in Spark; the rewrite preserves the same guarantee level (some row from
  * each tie class), identical to Spark's own WindowGroupLimit pushdown.
  *
- * Registered by [[GraftExtensions]] (`injectOptimizerRule`) and at
- * runtime via `experimental.extraOptimizations` in [[GroupTopK.install]].
+ * Registered only by [[GraftExtensions]] (`injectOptimizerRule`), so it
+ * rewrites the plans of sessions built with `spark.sql.extensions` and of
+ * no other session.
  */
 object GroupTopKRewrite extends Rule[LogicalPlan] {
 

@@ -306,7 +306,6 @@ object StreamingIngest {
 
     /** Fold one micro-batch's keys in (runs one distributed aggregate). */
     def update(batch: DataFrame, keyCol: String): Unit = {
-      graft.functions.CountMin.register(batch.sparkSession)
       val row = batch
         .agg(graft.functions.CountMin.sketch(col(keyCol), depth, width).as("sk"))
         .select(col("sk.n"), col("sk.cells")).head()

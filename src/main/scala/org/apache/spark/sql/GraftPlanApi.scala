@@ -1,15 +1,18 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.classic.{ExpressionUtils, Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 
 /**
  * Minimal bridge into the `private[sql]` plan-construction API: wraps a
- * custom [[LogicalPlan]] node as a user-facing DataFrame. This is the one
- * sanctioned way third-party whole-operator extensions (custom logical
- * node + strategy, the same mechanism Spark's own `Dataset` operators use)
- * become visible to the public Dataset API; everything else in this repo
- * stays on public Spark APIs.
+ * custom [[LogicalPlan]] node as a user-facing DataFrame, and a native
+ * Catalyst expression as a Column. This is the one sanctioned way
+ * third-party whole-operator extensions (custom logical node + strategy,
+ * the same mechanism Spark's own `Dataset` operators use) and native
+ * expressions become visible to the public Dataset API; everything else
+ * in this repo stays on public Spark APIs.
  */
 object GraftPlanApi {
 
@@ -18,16 +21,23 @@ object GraftPlanApi {
 
   /** Column (public API) → Catalyst Expression, eagerly converted through
     * the session's ColumnNode converter (possibly unresolved; the analyzer
-    * resolves it against the custom node's child). */
-  def expression(spark: SparkSession, col: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    * resolves it against the custom node's child). The plan-node faces
+    * (GroupTopK, GlobalRank) need this form: their expressions live in a
+    * custom logical node that no converter ever visits again. */
+  def expression(spark: SparkSession, col: Column): Expression =
     spark.asInstanceOf[ClassicSparkSession].expression(col)
 
-  /** Catalyst Expression → Column: the inverse of [[expression]]. Lets a
-    * native expression built with per-call constants (literal centers,
-    * projection vectors) become a Column directly, without registering a
-    * session function for data that changes every call. */
-  def column(expr: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    org.apache.spark.sql.classic.ExpressionUtils.column(expr)
+  /** A Column face over a native expression: `build` applied to the
+    * argument columns, with no session and no function registry. The
+    * session-free `ExpressionUtils.expression` leaves each argument that
+    * is not already an expression as a `columnnodeexpression(…)`
+    * placeholder, which the session's converter replaces when it converts
+    * the returned Column. That is why it is for Column faces only: inside
+    * a custom logical node the placeholder is never replaced (tried on
+    * GroupTopK and GlobalRank, it changed 47 of 283 plans and failed five
+    * queries with "Task not serializable"). */
+  def face(args: Column*)(build: Seq[Expression] => Expression): Column =
+    ExpressionUtils.column(build(args.map(ExpressionUtils.expression)))
 
   /** Session-scoped strategy registration that works on ANY session handed
     * to us (the driver contract passes sessions we didn't build), not just
@@ -38,23 +48,6 @@ object GraftPlanApi {
       exp.extraStrategies = exp.extraStrategies :+ strategy
   }
 
-  /** Idempotent runtime registration of an optimizer rule (the
-    * `spark.sql.extensions`-less counterpart of injectOptimizerRule). */
-  def ensureOptimizerRule(spark: SparkSession,
-                          rule: org.apache.spark.sql.catalyst.rules.Rule[
-                            org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
-    val exp = spark.asInstanceOf[ClassicSparkSession].experimental
-    if (!exp.extraOptimizations.contains(rule))
-      exp.extraOptimizations = exp.extraOptimizations :+ rule
-  }
-
-  /** Test hook: drop all runtime-registered strategies/rules. */
-  def clearExperimental(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[ClassicSparkSession].experimental
-    exp.extraStrategies = Nil
-    exp.extraOptimizations = Nil
-  }
-
   /** Test hook: the planner strategies an extensions setup would install
     * into a session built with `spark.sql.extensions`. */
   def plannerStrategies(spark: SparkSession,
@@ -62,5 +55,12 @@ object GraftPlanApi {
     val e = new SparkSessionExtensions
     ext(e)
     e.buildPlannerStrategies(spark.asInstanceOf[ClassicSparkSession])
+  }
+
+  /** Test hook: the optimizer rules the same setup would inject. */
+  def optimizerRules(spark: SparkSession, ext: SparkSessionExtensions => Unit): Seq[Rule[LogicalPlan]] = {
+    val e = new SparkSessionExtensions
+    ext(e)
+    e.buildOptimizerRules(spark.asInstanceOf[ClassicSparkSession])
   }
 }

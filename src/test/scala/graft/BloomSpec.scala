@@ -13,7 +13,7 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     val keys = (0 until 5000).map(i => s"key-$i").toDF("k")
     val bloom = BloomFunctions.build(keys, $"k", expectedItems = 5000L, numBits = 60000L)
-    val missed = keys.filter(!BloomFunctions.mightContain(spark, bloom, $"k")).count()
+    val missed = keys.filter(!BloomFunctions.mightContain(bloom, $"k")).count()
     assert(missed === 0L)
   }
 
@@ -23,7 +23,7 @@ class BloomSpec extends AnyFunSuite with SparkSuite {
     // ~12 bits/key with the sketch's optimal hash count → fpp well under 1%
     val bloom = BloomFunctions.build(keys, $"k", expectedItems = 5000L, numBits = 60000L)
     val probes = (0 until 20000).map(i => s"absent-$i").toDF("k")
-    val fp = probes.filter(BloomFunctions.mightContain(spark, bloom, $"k")).count()
+    val fp = probes.filter(BloomFunctions.mightContain(bloom, $"k")).count()
     assert(fp.toDouble / 20000 < 0.02, s"fp rate ${fp / 20000.0}")
   }
 

@@ -14,7 +14,6 @@ class CountMinSpec extends AnyFunSuite with SparkSuite {
 
   private def gridOf(items: Seq[String], parts: Int): (Long, Seq[Long]) = {
     import spark.implicits._
-    CountMin.register(spark)
     val row = items.toDF("item").repartition(parts)
       .agg(CountMin.sketch($"item", Depth, Width).as("sk"))
       .select($"sk.n", $"sk.cells").head()

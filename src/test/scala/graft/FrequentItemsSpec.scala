@@ -11,7 +11,6 @@ class FrequentItemsSpec extends AnyFunSuite with SparkSuite {
 
   private def sketchOf(items: Seq[String], cap: Int, parts: Int): (Long, Map[String, Long]) = {
     import spark.implicits._
-    FrequentItems.register(spark)
     val row = items.toDF("item").repartition(parts)
       .agg(FrequentItems.sketch($"item", cap).as("sk"))
       .select($"sk.n", $"sk.entries").head()

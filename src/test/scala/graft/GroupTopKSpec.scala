@@ -1,6 +1,7 @@
 package graft
 
-import graft.plans.{GroupTopK, GroupTopKExec}
+import graft.plans.{GraftExtensions, GroupTopK, GroupTopKExec, GroupTopKRewrite, GroupTopKStrategy}
+import org.apache.spark.sql.{DataFrame, GraftPlanApi}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,6 +12,15 @@ class GroupTopKSpec extends AnyFunSuite with SparkSuite {
 
   private def docs = spark.read.parquet(s"$sf0001/documents.parquet")
     .select(col("doc_id"), col("lang"), col("n_chars"))
+
+  /** `query` over a `docs_v` view, with [[GroupTopKRewrite]] applied to
+    * its optimized plan: the rewrite a session built with GraftExtensions
+    * runs, without installing it in the shared session. */
+  private def rewritten(query: String): DataFrame = {
+    docs.createOrReplaceTempView("docs_v")
+    GraftPlanApi.ensureStrategy(spark, GroupTopKStrategy)
+    GraftPlanApi.ofRows(spark, GroupTopKRewrite(spark.sql(query).queryExecution.optimizedPlan))
+  }
 
   test("GroupTopK equals the row_number window formulation") {
     val k = 3
@@ -90,9 +100,12 @@ class GroupTopKSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("GraftExtensions installs the strategy via SparkSessionExtensions") {
-    val strategies = org.apache.spark.sql.GraftPlanApi.plannerStrategies(
-      spark, new graft.plans.GraftExtensions())
-    assert(strategies.contains(graft.plans.GroupTopKStrategy))
+    val strategies = GraftPlanApi.plannerStrategies(spark, new GraftExtensions())
+    assert(strategies.contains(GroupTopKStrategy))
+  }
+
+  test("GraftExtensions injects the window-top-k rewrite rule") {
+    assert(GraftPlanApi.optimizerRules(spark, new GraftExtensions()).contains(GroupTopKRewrite))
   }
 
   test("optimizer rule rewrites the SQL window-top-k idiom onto GroupTopK") {
@@ -103,35 +116,21 @@ class GroupTopKSpec extends AnyFunSuite with SparkSuite {
         |  FROM docs_v) t
         |WHERE rk <= 3
         |ORDER BY lang, n_chars DESC, doc_id""".stripMargin
-    docs.createOrReplaceTempView("docs_v")
-    val before = spark.sql(sql).collect().toSeq
-    GroupTopK.install(spark)
-    try {
-      val df = spark.sql(sql)
-      val execs = df.queryExecution.executedPlan.toString
-      assert(execs.contains("GroupTopK"), s"rewrite did not fire:\n$execs")
-      assert(df.collect().toSeq === before)
-    } finally {
-      // keep the shared session pristine for other suites
-      org.apache.spark.sql.GraftPlanApi.clearExperimental(spark)
-    }
+    val df = rewritten(sql)
+    val execs = df.queryExecution.executedPlan.toString
+    assert(execs.contains("GroupTopK"), s"rewrite did not fire:\n$execs")
+    assert(df.collect().toSeq === spark.sql(sql).collect().toSeq)
   }
 
   test("rewrite leaves rank-keeping queries alone") {
-    docs.createOrReplaceTempView("docs_v")
-    GroupTopK.install(spark)
-    try {
-      val df = spark.sql(
-        """SELECT lang, doc_id, rk FROM (
-          |  SELECT lang, doc_id,
-          |         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id) AS rk
-          |  FROM docs_v) t
-          |WHERE rk <= 3 ORDER BY lang, rk""".stripMargin)
-      assert(!df.queryExecution.executedPlan.toString.contains("GroupTopK"))
-      assert(df.count() > 0)
-    } finally {
-      org.apache.spark.sql.GraftPlanApi.clearExperimental(spark)
-    }
+    val df = rewritten(
+      """SELECT lang, doc_id, rk FROM (
+        |  SELECT lang, doc_id,
+        |         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id) AS rk
+        |  FROM docs_v) t
+        |WHERE rk <= 3 ORDER BY lang, rk""".stripMargin)
+    assert(!df.queryExecution.executedPlan.toString.contains("GroupTopK"))
+    assert(df.count() > 0)
   }
 
   test("global top-k (no group columns) works and uses a single final partition") {
@@ -161,36 +160,25 @@ class GroupTopKSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("SQL global top-k idiom (empty PARTITION BY) survives the rewrite") {
-    docs.createOrReplaceTempView("docs_v")
-    GroupTopK.install(spark)
-    try {
-      val df = spark.sql(
-        """SELECT doc_id FROM (
-          |  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS rk
-          |  FROM docs_v) t
-          |WHERE rk <= 3 ORDER BY doc_id""".stripMargin)
-      val want = docs.orderBy(col("n_chars").desc, col("doc_id")).limit(3)
-        .select(col("doc_id")).orderBy(col("doc_id")).collect().toSeq
-      assert(df.collect().toSeq === want)
-    } finally {
-      org.apache.spark.sql.GraftPlanApi.clearExperimental(spark)
-    }
+    val df = rewritten(
+      """SELECT doc_id FROM (
+        |  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS rk
+        |  FROM docs_v) t
+        |WHERE rk <= 3 ORDER BY doc_id""".stripMargin)
+    assert(df.queryExecution.executedPlan.toString.contains("GroupTopK"))
+    val want = docs.orderBy(col("n_chars").desc, col("doc_id")).limit(3)
+      .select(col("doc_id")).orderBy(col("doc_id")).collect().toSeq
+    assert(df.collect().toSeq === want)
   }
 
   test("huge rank bounds abstain instead of truncating to a tiny k") {
-    docs.createOrReplaceTempView("docs_v")
-    GroupTopK.install(spark)
-    try {
-      val df = spark.sql(
-        """SELECT doc_id FROM (
-          |  SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id) AS rk
-          |  FROM docs_v) t
-          |WHERE rk <= 4294967297""".stripMargin)
-      assert(!df.queryExecution.executedPlan.toString.contains("GroupTopK"))
-      assert(df.count() === docs.count()) // keep-everything bound keeps everything
-    } finally {
-      org.apache.spark.sql.GraftPlanApi.clearExperimental(spark)
-    }
+    val df = rewritten(
+      """SELECT doc_id FROM (
+        |  SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id) AS rk
+        |  FROM docs_v) t
+        |WHERE rk <= 4294967297""".stripMargin)
+    assert(!df.queryExecution.executedPlan.toString.contains("GroupTopK"))
+    assert(df.count() === docs.count()) // keep-everything bound keeps everything
   }
 
   test("groups smaller than k pass through whole") {

@@ -366,4 +366,14 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       .collect().head
     assert(cms.getLong(0) > 0 && cms.getInt(1) === 1024)
   }
+
+  test("SQL face: Views writes only the function registry, and checks arity by name") {
+    val err = intercept[Exception] {
+      graft.ops.Views.sql(spark, sf0001,
+        "SELECT graft_cosine(CAST(embedding AS ARRAY<DOUBLE>)) FROM embeddings").collect()
+    }
+    assert(err.getMessage.contains("graft_cosine takes exactly 2 arguments, got 1"), err.getMessage)
+    val rules = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    assert(rules.extraOptimizations.isEmpty, rules.extraOptimizations)
+  }
 }

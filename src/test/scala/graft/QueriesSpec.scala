@@ -10,10 +10,20 @@ class QueriesSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("every registered query runs at sf0.001 and every oracle key is registered") {
+    // Building a query must not change the session it runs in: each query
+    // builds from a registry with no graft_* function in it (so none can
+    // lean on another query having registered one), and leaves it so, and
+    // installs no optimizer rule.
+    val registry = spark.sessionState.functionRegistry
+    def graftFunctions = registry.listFunction().filter(_.funcName.startsWith("graft_"))
+    val rules = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     SparkEntry.queries.foreach { case (name, fn) =>
+      graftFunctions.foreach(registry.dropFunction)
       val df = fn(spark, sf0001)
       assert(df.columns.nonEmpty, s"$name has no columns")
       assert(df.count() >= 0, s"$name failed")
+      assert(graftFunctions.isEmpty, s"$name registered $graftFunctions")
+      assert(rules.extraOptimizations.isEmpty, s"$name installed ${rules.extraOptimizations}")
     }
     val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(unknown.isEmpty, s"oracleSql keys without a query: $unknown")

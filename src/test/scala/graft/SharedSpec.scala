@@ -68,11 +68,12 @@ class SharedSpec extends AnyFunSuite with SparkSuite {
   }
 
   /** Queries whose build ran lazy checkpoints or an in-plan eager pin (the
-    * dedup spine's, q107's fingerprints) and no other Spark job. Every
+    * dedup spine's, q107's fingerprints, q34's and q82's cell assignment)
+    * and no other Spark job. Every
     * such frame is Shared or unpinned now, so building them runs nothing. */
   private val formerPinQueries = Seq(
-    "q31_neardup_jaccard", "q32_dedup_minhash_lsh", "q53_decontamination",
-    "q76_curation_pipeline", "q83_containment_neardup", "q84_edit_neardup",
+    "q31_neardup_jaccard", "q32_dedup_minhash_lsh", "q34_cosine_neardup", "q53_decontamination",
+    "q76_curation_pipeline", "q82_semdedup", "q83_containment_neardup", "q84_edit_neardup",
     "q85_incremental_lsh", "q88_bigram_logprob", "q95_source_lift",
     "q104_type_transitions", "q107_winnow_fingerprint_pairs", "q111_pmi_bigrams",
     "q112_contamination_frac", "q113_boilerplate_strip", "q115_source_overlap",

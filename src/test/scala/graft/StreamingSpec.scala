@@ -340,7 +340,6 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     ms.addData(all.drop(41): _*); q.processAllAvailable()
     q.stop()
     assert(cms.n === 60L)
-    graft.functions.CountMin.register(spark)
     val direct = all.toDF("k")
       .agg(graft.functions.CountMin.sketch($"k", 4, 64).as("sk"))
       .select($"sk.cells").head().getSeq[Long](0)

@@ -16,7 +16,6 @@ class StringSimSpec extends AnyFunSuite with SparkSuite {
 
   private def jw(a: String, b: String): Double = {
     import spark.implicits._
-    StringSimilarity.register(spark)
     Seq((a, b)).toDF("a", "b")
       .select(StringSimilarity.jaroWinkler($"a", $"b").as("j"))
       .collect().head.getDouble(0)
@@ -40,7 +39,6 @@ class StringSimSpec extends AnyFunSuite with SparkSuite {
 
   test("null inputs propagate null") {
     import spark.implicits._
-    StringSimilarity.register(spark)
     val r = Seq((Option("x"), Option.empty[String]))
       .toDF("a", "b")
       .select(StringSimilarity.jaroWinkler($"a", $"b").as("j"))
@@ -50,7 +48,6 @@ class StringSimSpec extends AnyFunSuite with SparkSuite {
 
   test("metric properties over random strings: symmetry, identity, range") {
     import spark.implicits._
-    StringSimilarity.register(spark)
     val rnd = new scala.util.Random(42)
     val strs = Seq.fill(60)(
       (0 until rnd.nextInt(12)).map(_ => "abcde xyz".charAt(rnd.nextInt(9))).mkString)

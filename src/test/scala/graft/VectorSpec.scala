@@ -10,7 +10,6 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
 
   private def cos(a: Seq[Double], b: Seq[Double]): Option[Double] = {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val r = Seq((a, b)).toDF("a", "b")
       .select(VectorFunctions.cosine($"a", $"b").as("c"))
       .collect().head
@@ -33,7 +32,6 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("float-array fixture path: self-cosine is 1") {
-    VectorFunctions.register(spark)
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("embedding").cast(ArrayType(DoubleType)).as("emb"))
       .limit(5)
@@ -75,7 +73,6 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("TopKPairs keeps the k best with deterministic tie order") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, 0.9, 10L), (1L, 0.9, 5L), (1L, 0.1, 1L), (1L, 0.5, 7L),
@@ -127,7 +124,7 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
     val model = graft.ops.Pq.fit(e, iters = 1)
     val cb = model.codebooks.map(_.map(_.toArray).toArray).toArray
     val dsub = cb(0)(0).length
-    val got = e.select($"vec_id", VectorFunctions.pqEncode(spark, $"emb", model.codebooks).as("codes"))
+    val got = e.select($"vec_id", VectorFunctions.pqEncode($"emb", model.codebooks).as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     val raw = e.collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
     raw.foreach { case (id, emb) =>
@@ -143,7 +140,7 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
     }
     // mismatched dimension → null, not a prefix encoding
     val bad = Seq(Seq(1.0, 2.0)).toDF("emb")
-      .select(VectorFunctions.pqEncode(spark, $"emb", model.codebooks).as("c")).head()
+      .select(VectorFunctions.pqEncode($"emb", model.codebooks).as("c")).head()
     assert(bad.isNullAt(0))
   }
 
@@ -200,8 +197,8 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
     def foldDot(m: Seq[Double], w: Seq[Double]) =
       (0 until d).map(i => (emb.getItem(i) - lit(m(i))) * lit(w(i))).reduce(_ + _)
     val pairs =
-      centerSets.map(cs => (VectorFunctions.minSqDist(spark, emb, cs), foldMin(cs))) ++
-        Seq(v, vNeg).map(w => (VectorFunctions.centeredDot(spark, emb, mu.toSeq, w.toSeq),
+      centerSets.map(cs => (VectorFunctions.minSqDist(emb, cs), foldMin(cs))) ++
+        Seq(v, vNeg).map(w => (VectorFunctions.centeredDot(emb, mu.toSeq, w.toSeq),
           foldDot(mu.toSeq, w.toSeq)))
     val cols = pairs.zipWithIndex.flatMap { case ((k, f), j) =>
       Seq(k.as(s"k$j"), f.as(s"f$j")) }
@@ -231,8 +228,8 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
     for ((mode, confs) <- kernelModes) {
       val r = withConfs(confs: _*) {
         frame(Seq(1L -> (c0.toSeq :+ 1.0))).select(
-          VectorFunctions.minSqDist(spark, emb, Seq(c0.toSeq)),
-          VectorFunctions.centeredDot(spark, emb, mu.toSeq, v.toSeq)).head()
+          VectorFunctions.minSqDist(emb, Seq(c0.toSeq)),
+          VectorFunctions.centeredDot(emb, mu.toSeq, v.toSeq)).head()
       }
       assert(r.isNullAt(0) && r.isNullAt(1), mode)
     }
@@ -307,7 +304,6 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
   test("q34 ball-cover enumeration equals the brute-force all-pairs set") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{broadcast, round}
-    graft.functions.VectorFunctions.register(spark)
     // Brute force stays as the spec-only exactness oracle (the r8 q34
     // registration): the ball-cover spine may not drop ANY qualifying
     // pair — recall 1 by the sphere triangle inequality, re-proved here.
@@ -351,7 +347,6 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
   test("SrpSignature expression equals the higher-order-function formulation bit-for-bit") {
     import spark.implicits._
     import graft.functions.VectorFunctions.{srpPlanes, SrpBits}
-    VectorFunctions.register(spark)
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select($"vec_id",
         expr("transform(embedding, x -> cast(x as double))").as("emb"))
@@ -410,7 +405,6 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("mismatched vector dimensions yield null, not a prefix similarity") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val row = Seq((Array(1.0, 2.0, 3.0), Array(1.0, 2.0)))
       .toDF("a", "b")
@@ -420,7 +414,6 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_topk rejects bad score type and out-of-range k at analysis time") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1, 2L)).toDF("i", "id")
     val typeErr = intercept[Exception] {
@@ -434,7 +427,6 @@ class VectorSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("rejects non-double arrays with a clear analysis error") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val err = intercept[Exception] {
       Seq(("x", "y")).toDF("a", "b")

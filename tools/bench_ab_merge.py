@@ -1,9 +1,12 @@
 #!/usr/bin/env python3
-"""Merge two bench_detail.json runs (same session, see bench_ab.sh) into
-BENCH_AB.json: per-query old/new medians + ratio, common-set totals, and the
-largest movers in each direction. Medians because single samples on this box
-spread +/-25% (Bench.scala header); the ratio of same-session medians is the
-signal the per-round absolute totals cannot give.
+"""Merge the bench_detail.json runs of two trees (same session, see
+bench_ab.sh) into BENCH_AB.json: per-query old/new medians + ratio,
+common-set totals, and the largest movers in each direction. Each side may
+take several runs (bench_ab.sh passes two per side, in ABBA order); a
+query's samples from all of one side's runs are pooled before the median.
+Medians because single samples on this box spread +/-25% (Bench.scala
+header); the ratio of same-session medians is the signal the per-round
+absolute totals cannot give.
 
 Failed queries (-1 medians) are EXCLUDED from the comparable set and listed
 separately: a query that errors costs ~0 s, so summing it on one side only
@@ -14,10 +17,14 @@ both-sides-succeeded comparison (0.96x) dissolved."""
 import argparse, json, statistics
 
 
-def load(path):
-    """(per-query median, per-query raw samples) of one bench_detail.json."""
-    with open(path) as f:
-        runs = json.load(f)["runs"]
+def load(paths):
+    """(per-query median, per-query pooled raw samples) of one side's
+    bench_detail.json files."""
+    runs = {}
+    for path in paths:
+        with open(path) as f:
+            for name, samples in json.load(f)["runs"].items():
+                runs.setdefault(name, []).extend(samples)
     med = {}
     for name, samples in runs.items():
         ok = [s for s in samples if s >= 0]
@@ -27,8 +34,8 @@ def load(path):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--old", required=True)
-    ap.add_argument("--new", required=True)
+    ap.add_argument("--old", required=True, nargs="+")
+    ap.add_argument("--new", required=True, nargs="+")
     ap.add_argument("--old-rev", default="old")
     ap.add_argument("--new-rev", default="new")
     ap.add_argument("--sf", default="")
